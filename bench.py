@@ -323,9 +323,14 @@ def main() -> None:
         # backing blocks it just dropped (localCheckpoint truncates
         # lineage, so a stale view would be unrecoverable, not merely
         # recomputable). No query may read a view another query created;
-        # drop them so the invariant is enforced, not assumed.
-        for view in spark.catalog.listTables():
-            if view.isTemporary:
+        # drop them so the invariant is enforced, not assumed. Global
+        # temp views too: listing the global_temp database returns them
+        # along with the session's local temp views.
+        global_temp = spark.conf.get("spark.sql.globalTempDatabase")
+        for view in spark.catalog.listTables(global_temp):
+            if view.namespace == [global_temp]:
+                spark.catalog.dropGlobalTempView(view.name)
+            elif view.isTemporary:
                 spark.catalog.dropTempView(view.name)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]

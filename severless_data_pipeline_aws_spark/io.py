@@ -12,6 +12,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -36,33 +37,59 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def _nanos_timestamp_cols(path: str) -> frozenset[str]:
-    """Column names stored as parquet TIMESTAMP(NANOS) (footer read, cached)."""
-    try:
-        cached = _nanos_timestamp_cols._cache  # type: ignore[attr-defined]
-    except AttributeError:
-        cached = _nanos_timestamp_cols._cache = {}  # type: ignore[attr-defined]
-    if path not in cached:
-        import pyarrow.dataset as ds
+#: path -> (stamp, Spark's inferred schema, TIMESTAMP(NANOS) column names)
+_SCHEMAS: dict[str, tuple[tuple, StructType, frozenset[str]]] = {}
 
-        schema = ds.dataset(path, format="parquet").schema
-        cached[path] = frozenset(
-            f.name for f in schema if str(f.type).startswith("timestamp[ns")
+
+def _stamp(path: str) -> tuple | None:
+    """(name, mtime_ns, size) of the file, or of every file under a
+    directory table; None when the path cannot be read locally."""
+    try:
+        files = (
+            sorted(os.path.join(d, n) for d, _, names in os.walk(path) for n in names)
+            if os.path.isdir(path)
+            else [path]
         )
-    return cached[path]
+        return tuple((p, (st := os.stat(p)).st_mtime_ns, st.st_size) for p in files)
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, frozenset[str]]:
+    """``spark.read.parquet(path)`` plus the names of its TIMESTAMP(NANOS)
+    columns.
+
+    Schema inference is a Spark job (a footer read per load), so the
+    inferred schema is cached with the file stamps it was read under and
+    handed to later loads through ``spark.read.schema``; a rewritten or
+    resized file misses the cache and is inferred again."""
+    stamp = _stamp(path)
+    hit = _SCHEMAS.get(path)
+    if stamp is not None and hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path), hit[2]
+    import pyarrow.dataset as ds
+
+    df = spark.read.parquet(path)
+    nanos = frozenset(
+        f.name
+        for f in ds.dataset(path, format="parquet").schema
+        if str(f.type).startswith("timestamp[ns")
+    )
+    if stamp is not None:
+        _SCHEMAS[path] = (stamp, df.schema, nanos)
+    return df, nanos
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = table_path(sf_dir, name)
-    df = spark.read.parquet(path)
+    df, nanos = _read_parquet(spark, table_path(sf_dir, name))
     # parquet TIMESTAMP(NANOS) arrives as long under nanosAsLong; convert to
     # TimestampType via integer division (float div would lose precision on
     # ~1.7e18 epoch-nanos). Data is generated at micro precision => lossless.
     # Detection is generic (arrow footer), not hardcoded to one column.
-    for col in _nanos_timestamp_cols(path):
+    for col in nanos:
         if dict(df.dtypes).get(col) == "bigint":
             df = df.withColumn(col, F.expr(f"timestamp_micros({col} div 1000)"))
     # parquet timestamp[us] arrives as TIMESTAMP_NTZ; normalize to the

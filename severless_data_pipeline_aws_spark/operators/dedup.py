@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, Observation, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..io import Tables
@@ -717,73 +717,75 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _min_label_hop(edges: DataFrame, comps: DataFrame) -> DataFrame:
     """One neighbor-min propagation step: comps(doc_id, component) ->
-    same schema with component := min(component, min over neighbors)."""
-    msgs = (
+    same schema with component := min(component, min over neighbors).
+    ``edges`` carries a self-loop per node, so the one join reads both
+    the node's own label and its neighbors' (comps ∪ (edges ⋈ comps))
+    and comps appears once in the plan."""
+    return (
         edges.join(comps, edges["dst"] == comps["doc_id"])
-        .select(F.col("src").alias("m_id"), "component")
-        .groupBy("m_id")
-        .agg(F.min("component").alias("nbr_min"))
+        .groupBy(F.col("src").alias("doc_id"))
+        .agg(F.min("component").alias("component"))
     )
-    return comps.join(msgs, comps["doc_id"] == msgs["m_id"], "left").select(
-        "doc_id",
-        F.least("component", F.coalesce("nbr_min", "component")).alias(
-            "component"
-        ),
+
+
+def _pointer_jump(comps: DataFrame) -> DataFrame:
+    """component := component of my component, as one window instead of
+    a self-join. Each node u lands in partition comp(u) (it asks for
+    that node's label) and in partition u (it answers with its own).
+    Partition k then holds comp(k) and copies of k itself; since
+    comp(k) <= k, their min is comp(k), the answer every asker takes."""
+    ask = F.struct(
+        F.col("component").alias("k"), F.col("doc_id").alias("u"), "component"
     )
+    answer = F.struct(F.col("doc_id").alias("k"), F.lit(None).alias("u"), "component")
+    rows = comps.select(F.explode(F.array(ask, answer)).alias("r")).select("r.*")
+    return rows.select(
+        F.col("u").alias("doc_id"),
+        F.min("component").over(W.partitionBy("k")).alias("component"),
+    ).filter(F.col("doc_id").isNotNull())
 
 
 def min_label_components(edges: DataFrame) -> DataFrame:
     """Iterative min-label propagation over a symmetric edge list
     (columns ``src``, ``dst``) -> one row per node: (doc_id, component).
 
-    r12 (guide §2.4): each materialization cycle now batches TWO
-    neighbor hops plus one pointer jump (component := component of my
-    component — valid because every label is a node id in the same
-    component, and monotone since comp(u) <= u). The checkpoint+count
-    pair is the per-cycle fixed cost, so fewer cycles beat cheaper
-    cycles: the sf0.1 shingle graph (diameter ~12) converged in 13
-    one-hop rounds before and 5 cycles now, 7.4 -> 5.7s same-session
-    (output proven identical both directions). Lineage stays bounded —
-    each cycle starts from the previous checkpoint. Shared by the
+    Each cycle batches TWO neighbor hops plus one pointer jump
+    (component := component of my component — valid because every
+    label is a node id in the same component, and monotone since
+    comp(u) <= u), then materializes the labels with one checkpoint,
+    so lineage stays bounded. Convergence rides that checkpoint job: an
+    Observation records the decimal sum of the labels, and because
+    labels only decrease, an unchanged sum means no label changed — no
+    comparison join and no count job. Each hop reads the labels through
+    one join and the pointer jump is a window, not a self-join, so no
+    part of a cycle's plan is computed twice. Shared by the
     shingle-graph and semantic (embedding-cosine) cluster queries."""
-    edges = edges.localCheckpoint(eager=True)
-    comps = (
-        edges.select(F.col("src").alias("doc_id")).distinct()
-        .withColumn("component", F.col("doc_id"))
-        .localCheckpoint(eager=True)
+    edges = edges.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+    nodes = edges.select(F.col("src").alias("doc_id")).distinct()
+    # checkpointed after a not-null filter, the ids are non-nullable: no
+    # join in the loop infers a filter that would tell two scans of it apart
+    edges = edges.union(nodes.select("doc_id", "doc_id")).localCheckpoint(
+        eager=True
     )
-    for _ in range(20):  # cycle bound; covers diameter ~2^20 via jumps
-        cur = _min_label_hop(edges, _min_label_hop(edges, comps))
-        ptr = cur.select(
-            F.col("doc_id").alias("p_id"), F.col("component").alias("p_comp")
-        )
-        cur = cur.join(ptr, cur["component"] == ptr["p_id"], "left").select(
-            "doc_id",
-            F.least("component", F.coalesce("p_comp", "component")).alias(
-                "component"
-            ),
-        )
-        # r11 (guide §2.4): the convergence flag rides the update join —
-        # min-label propagation is monotone non-increasing, so "changed"
-        # is exactly new < old; no extra comparison join needed
-        orig = comps.select(
-            F.col("doc_id").alias("o_id"), F.col("component").alias("o_comp")
-        )
-        updated = (
-            cur.join(orig, cur["doc_id"] == orig["o_id"])
-            .select(
-                "doc_id",
-                F.col("component").alias("new_component"),
-                (F.col("component") < F.col("o_comp")).alias("chg"),
+    # the self-loops are the initial labels; read from the checkpoint,
+    # since `nodes` would recompute the input edges
+    comps = edges.filter("src = dst").select(
+        F.col("src").alias("doc_id"), F.col("dst").alias("component")
+    )
+    last = None  # label sum after the previous cycle
+    for cycle in range(20):  # cycle bound; covers diameter ~2^20 via jumps
+        obs = Observation()
+        comps = (
+            _pointer_jump(_min_label_hop(edges, _min_label_hop(edges, comps)))
+            .observe(
+                obs, F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
             )
             .localCheckpoint(eager=True)
         )
-        changed = updated.filter("chg").count()
-        comps = updated.select(
-            "doc_id", F.col("new_component").alias("component")
-        )
-        if changed == 0:
+        total = obs.get["s"]
+        if cycle and total == last:
             break
+        last = total
     return comps
 
 

@@ -1616,13 +1616,13 @@ def funnel_markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataF
 _KM_SC = "1000000000"  # 1e9 fixed-point survival scale
 
 
-#: the recursive KM core — IDENTICAL text on both engines (Spark 4
-#: native WITH RECURSIVE): survival iterates as a 1e9-scaled integer,
+#: the recursive KM core, the oracle side (DuckDB WITH RECURSIVE):
+#: survival iterates as a 1e9-scaled integer,
 #: S_k = floor(S_{k-1} * (n_k - d_k) / n_k). Both engines compute the
 #: BIGINT product exactly, the same correctly-rounded double division,
 #: and the same floor — engine-identical at every step while the
 #: product stays under 2^53 (users <= ~9e6 per study; beyond that,
-#: shard studies by cohort). km_steps is the only per-engine part
+#: shard studies by cohort). km_steps is the per-engine prelude
 #: (DATE arithmetic dialects differ), and carries death times only.
 _KM_CORE = f"""
     walk AS (
@@ -1638,15 +1638,37 @@ _KM_CORE = f"""
     ORDER BY k.t_days
 """
 
+#: the same walk on the Spark side as one lazy plan: the step table
+#: (one row per death day; follow-up is at most 5 days, so at most 6
+#: steps at any scale) is gathered into one sorted array and folded by
+#: aggregate() with _KM_CORE's step expression, then exploded back.
+_KM_FOLD = f"""
+    folded AS (
+        SELECT steps,
+               slice(aggregate(steps, CAST(array({_KM_SC}) AS ARRAY<BIGINT>),
+                     (s, k) -> concat(s, array(CAST(floor(
+                         (element_at(s, -1) * (k.n_at_risk - k.d)) / k.n_at_risk)
+                         AS BIGINT)))), 2, size(steps)) AS s
+        FROM (SELECT array_sort(collect_list(struct(rn, t_days, n_at_risk, d, c)))
+                     AS steps
+              FROM km_steps)
+    ),
+    walk AS (SELECT inline(arrays_zip(steps, s)) FROM folded)
+    SELECT steps.t_days, steps.n_at_risk, steps.d AS n_deaths,
+           steps.c AS n_censored, CAST(s AS DOUBLE) / {_KM_SC}.0 AS survival
+    FROM walk
+    ORDER BY t_days
+"""
 
-def _km_steps_sql(day_diff) -> str:
-    """Engine-specific prelude to the shared core: per-user time to
+
+def _km_steps_sql(day_diff, events: str = "events") -> str:
+    """Engine-specific prelude to the KM walk: per-user time to
     first purchase under staggered follow-up (each user observed for
     1 + user_id %% 5 days — the rolling-enrollment study shape that
     right-censors users whose window ends before they convert), then
     death/censor counts per day, at-risk via the day-grain cumulative
     sum, death times numbered for the walk. ``day_diff(a, b)`` renders
-    whole days from a to b."""
+    whole days from a to b; ``events`` names the events relation."""
     return f"""
     users AS (
         SELECT user_id,
@@ -1654,7 +1676,7 @@ def _km_steps_sql(day_diff) -> str:
                MIN(CASE WHEN event_type = 'purchase' THEN CAST(ts AS DATE) END)
                    AS purchase_day,
                CAST(1 + user_id % 5 AS BIGINT) AS followup_days
-        FROM events GROUP BY user_id
+        FROM {events} GROUP BY user_id
     ),
     times AS (
         SELECT CASE WHEN purchase_day IS NOT NULL
@@ -1703,50 +1725,32 @@ def _km_steps_sql(day_diff) -> str:
         "(a naive CCDF) cannot replace: users whose observation "
         "window closes before they convert contribute to the at-risk "
         "denominators up to their censor time instead of polluting "
-        "the event counts. The product-limit estimator runs as the "
-        "SHARED recursive core _KM_CORE — the identical WITH "
-        "RECURSIVE text on both engines (the sql_api_recursive_cte "
-        "surface doing real statistics), iterating survival as a "
-        "1e9-scaled integer so every step is engine-identical "
-        "arithmetic. The fact table reduces to per-user first/"
-        "purchase days in one shuffle; everything after is the "
-        "calendar-bounded step table and a |death days|-step "
-        "recursion of metadata-scale joins."
+        "the event counts. The product-limit estimator iterates "
+        "survival as a 1e9-scaled integer so every step is engine-"
+        "identical arithmetic: the oracle walks it with a WITH "
+        "RECURSIVE CTE (_KM_CORE); Spark gathers the step table into "
+        "one sorted array and folds _KM_CORE's step expression over it "
+        "with aggregate() — one lazy plan, no per-step jobs. The fact "
+        "table reduces to per-user first/purchase days in one shuffle; "
+        "everything after is the calendar-bounded step table (at most "
+        "6 death days: follow-up ends after 5)."
     ),
-    tags=("funnel", "timeseries", "stats", "recursive", "spark4"),
+    tags=("funnel", "timeseries", "stats"),
 )
 def funnel_kaplan_meier_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..io import register_views
-
-    register_views(spark, sf_dir)
-    # r11: materialize the step table BEFORE the recursion. Spark inlines
-    # CTEs into the recursive loop body, so every UnionLoop iteration
-    # re-ran the whole events scan + window prelude; km_steps is death-
-    # day-grain (bounded by the calendar span), so localCheckpoint makes
-    # each of the |death days| iterations a metadata-scale join instead
-    # of a fact-table recomputation. _KM_CORE (the shared recursive text
-    # that proves oracle equivalence) is unchanged — its km_steps name
-    # now resolves to the checkpointed temp view.
-    steps = spark.sql(
-        "WITH "
-        + _km_steps_sql(lambda a, b: f"datediff({b}, {a})")
-        + " SELECT rn, t_days, n_at_risk, d, c FROM km_steps"
-    ).localCheckpoint(eager=True)
-    # r12 (advice): the session-global temp view takes the repo's
-    # reserved double-underscore namespace; a one-line wrapper CTE binds
-    # it to the km_steps identifier so the shared _KM_CORE text stays
-    # byte-identical to the oracle's.
-    steps.createOrReplaceTempView("__km_steps")
     return spark.sql(
-        "WITH RECURSIVE km_steps AS "
-        "(SELECT rn, t_days, n_at_risk, d, c FROM __km_steps)," + _KM_CORE
+        "WITH "
+        + _km_steps_sql(lambda a, b: f"datediff({b}, {a})", events="{events}")
+        + ",\n"
+        + _KM_FOLD,
+        events=Tables(spark, sf_dir).events,
     )
 
 
 _LR_SC = "10000000000"  # 1e10 exactness scale for the log-rank folds
 
 
-def _logrank_steps_sql(day_diff) -> str:
+def _logrank_steps_sql(day_diff, events: str = "events") -> str:
     """Two-arm (user_id % 2) version of the KM prelude: per death time,
     total and arm-A at-risk counts and death counts."""
     return f"""
@@ -1757,7 +1761,7 @@ def _logrank_steps_sql(day_diff) -> str:
                MIN(CASE WHEN event_type = 'purchase' THEN CAST(ts AS DATE) END)
                    AS purchase_day,
                CAST(1 + user_id % 5 AS BIGINT) AS followup_days
-        FROM events GROUP BY user_id
+        FROM {events} GROUP BY user_id
     ),
     times AS (
         SELECT arm,
@@ -1861,18 +1865,16 @@ def _logrank_final(dbl, int_div, big: str) -> str:
     tags=("stats", "ab", "funnel", "timeseries"),
 )
 def stats_logrank_two_arm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..io import register_views
-
-    register_views(spark, sf_dir)
     return spark.sql(
         "WITH "
-        + _logrank_steps_sql(lambda a, b: f"datediff({b}, {a})")
+        + _logrank_steps_sql(lambda a, b: f"datediff({b}, {a})", events="{events}")
         + ",\n"
         + _logrank_final(
             lambda x: f"CAST({x} AS DOUBLE)",
             lambda num, den: f"(({num}) DIV ({den}))",
             "DECIMAL(38,0)",
-        )
+        ),
+        events=Tables(spark, sf_dir).events,
     )
 
 
@@ -1926,17 +1928,15 @@ def _na_final(dbl, int_div) -> str:
     tags=("stats", "funnel", "timeseries"),
 )
 def stats_nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..io import register_views
-
-    register_views(spark, sf_dir)
     return spark.sql(
         "WITH "
-        + _km_steps_sql(lambda a, b: f"datediff({b}, {a})")
+        + _km_steps_sql(lambda a, b: f"datediff({b}, {a})", events="{events}")
         + ",\n"
         + _na_final(
             lambda x: f"CAST({x} AS DOUBLE)",
             lambda num, den: f"(({num}) DIV ({den}))",
-        )
+        ),
+        events=Tables(spark, sf_dir).events,
     )
 
 

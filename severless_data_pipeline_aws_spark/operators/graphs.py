@@ -250,9 +250,9 @@ _PR_ITERS = 3
 
 #: one PageRank power-iteration round as a DuckDB CTE. The incoming
 #: contributions fold in src order (list_reduce over an ORDER BY src
-#: list), matching the Spark side's array_sort(collect_list) +
-#: aggregate fold — so the double sums are bit-identical, not just
-#: close, and the query is hash-exact instead of rows-only.
+#: list), matching the Spark side's aggregate fold over the (src,
+#: dst)-sorted edge list — so the double sums are bit-identical, not
+#: just close, and the query is hash-exact instead of rows-only.
 _PR_STEP_SQL = """
         SELECT nodes.v,
                CAST(0.15 AS DOUBLE) / CAST((SELECT cnt FROM n) AS DOUBLE)
@@ -302,18 +302,18 @@ _PR_STEP_SQL = """
         "directed nation co-trade graph (customer nation -> supplier "
         "nation on high-value orders; simplified variant: dangling "
         "mass is not redistributed, identically on both engines). "
-        "Each Spark round is contributions = ranks ⋈ edges ⋈ outdeg, "
-        "then a groupBy(dst) whose double sum folds in src order "
-        "(array_sort(collect_list(struct)) + sequential aggregate) so "
-        "it is bit-identical to the oracle's ordered list_reduce — the "
-        "same order-pinning that makes the label-centroid query "
-        "hash-exact. The edge list and degree table are built once and "
-        "persisted; every round reuses them (on a cluster: the "
-        "hash-partitioned edge index every power iteration joins "
-        "against), and localCheckpoint cuts per-round lineage. The "
-        "nation graph is metadata-scale; on a billion-node graph the "
-        "identical loop runs with the edge list bucketed by src and "
-        "the ordered fold swapped for plain sum (order-pinning is an "
+        "The nation graph is metadata-scale (at most 25 nodes), so "
+        "Spark gathers it into one row — the edge list sorted by "
+        "(src, dst), the node list and an out-degree map — and runs "
+        "the power iterations as an aggregate() over a rank map, all "
+        "in one lazy plan with no per-round jobs. Each node's incoming "
+        "contributions fold in src order (filter over the sorted edge "
+        "list + sequential aggregate), so the double sums are "
+        "bit-identical to the oracle's ordered list_reduce — the same "
+        "order-pinning that makes the label-centroid query hash-exact. "
+        "On a billion-node graph the rounds become ranks ⋈ edges ⋈ "
+        "outdeg joins with the edge list bucketed by src and the "
+        "ordered fold swapped for plain sum (order-pinning is an "
         "oracle-exactness device, not an algorithmic need)."
     ),
     tags=("graph", "join", "iterative"),
@@ -331,61 +331,38 @@ def graph_pagerank_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_nationkey").cast("bigint").alias("b"),
         )
         .distinct()
-        .persist()
     )
-    nodes = (
-        co.select(F.col("a").alias("v"))
-        .union(co.select(F.col("b").alias("v")))
-        .distinct()
-        .persist()
+    graph = co.agg(
+        F.array_sort(F.collect_list(F.struct("a", "b"))).alias("e"),
+        F.array_sort(
+            F.array_union(F.collect_set("a"), F.collect_set("b"))
+        ).alias("vs"),
+    ).select(
+        "e",
+        "vs",
+        F.expr(
+            "map_from_arrays(vs, transform(vs, v -> size(filter(e, x -> x.a = v))))"
+        ).alias("deg"),
+        F.expr("CAST(size(vs) AS DOUBLE)").alias("n"),
     )
-    deg = co.groupBy("a").agg(F.count(F.lit(1)).alias("outdeg")).persist()
-    n_nodes = nodes.count()  # scalar query parameter (metadata-scale)
-    if n_nodes == 0:
-        # empty graph: the (1/N, 0.15/N) literals would constant-fold to a
-        # divide-by-zero under ANSI mode even though no row evaluates them
-        return spark.createDataFrame([], "nationkey bigint, pagerank double")
-
-    base = f"CAST(0.15 AS DOUBLE) / CAST({n_nodes} AS DOUBLE)"
-    ranks = nodes.select(
-        "v", F.expr(f"CAST(1.0 AS DOUBLE) / CAST({n_nodes} AS DOUBLE)").alias("r")
+    # an empty graph has no nodes: transform never evaluates 1/n
+    ranks = graph.select(
+        "vs",
+        F.expr(
+            f"""aggregate(
+                sequence(1, {_PR_ITERS}),
+                map_from_arrays(vs, transform(vs, v -> CAST(1.0 AS DOUBLE) / n)),
+                (r, i) -> map_from_arrays(vs, transform(vs, v ->
+                    CAST(0.15 AS DOUBLE) / n + CAST(0.85 AS DOUBLE) * aggregate(
+                        filter(e, x -> x.b = v), CAST(0.0 AS DOUBLE),
+                        (acc, x) -> acc + r[x.a] / deg[x.a]))))"""
+        ).alias("r")
     )
-    for it in range(_PR_ITERS):
-        contrib = (
-            co.join(ranks, co["a"] == ranks["v"])
-            .join(deg, "a")
-            .select(
-                F.col("b").alias("dst"),
-                F.col("a").alias("src"),
-                (F.col("r") / F.col("outdeg")).alias("c"),
-            )
-            .groupBy("dst")
-            .agg(
-                F.expr(
-                    "aggregate(transform(array_sort(collect_list(struct(src, c))), "
-                    "p -> p.c), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-                ).alias("s")
-            )
-        )
-        ranks = (
-            nodes.join(contrib, nodes["v"] == contrib["dst"], "left")
-            .select(
-                "v",
-                F.expr(
-                    f"{base} + CAST(0.85 AS DOUBLE) * coalesce(s, CAST(0.0 AS DOUBLE))"
-                ).alias("r"),
-            )
-        )
-        # r12 (guide §2.4): each iteration consumes ranks ONCE, so
-        # lineage grows linearly, not exponentially — a checkpoint per
-        # iteration was pure job overhead at 3 iterations. Truncate only
-        # every 4th round (lineage bound for larger _PR_ITERS): 3
-        # checkpoint jobs -> 0 here, 4.5 -> 3.1s same-session A/B with
-        # bit-identical output (the ordered collect_list fold is
-        # unchanged).
-        if (it + 1) % 4 == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select(F.col("v").alias("nationkey"), F.col("r").alias("pagerank"))
+    # explode the node list, not the rank map: Spark infers a non-empty
+    # filter on a generator's input, which would run the fold twice
+    return ranks.select(F.explode("vs").alias("nationkey"), "r").select(
+        "nationkey", F.col("r")[F.col("nationkey")].alias("pagerank")
+    )
 
 
 @register(

@@ -316,10 +316,14 @@ def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
         # the stream still running — reading the memory table then would
         # silently return a partial replay. Fail loudly instead.
         if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
+            timeout = RuntimeError(
                 f"availableNow replay {name} did not drain within 300s"
             )
+            try:
+                q.stop()
+            except Exception as exc:  # the timeout stays the error raised
+                raise timeout from exc
+            raise timeout
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     return stream_df.sparkSession.table(name)

@@ -1,0 +1,83 @@
+"""Job-count pins for the iterative queries and table loads.
+
+Jobs are counted as perfbench does: the scheduler's next job id before
+and after the call (``dagScheduler().nextJobId()``), so every job the
+call launches counts, whatever thread or job group it runs under.
+"""
+
+from __future__ import annotations
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from severless_data_pipeline_aws_spark.io import load_table
+
+
+def _next_job(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def _jobs(spark, call):
+    j0 = _next_job(spark)
+    out = call()
+    return _next_job(spark) - j0, out
+
+
+@pytest.mark.parametrize(
+    "name", ["funnel_kaplan_meier_conversion", "graph_pagerank_bounded"]
+)
+def test_iterative_query_build_launches_no_jobs(spark, sf_dir, name):
+    from severless_data_pipeline_aws_spark.registry import load_all
+
+    fn = load_all()[name].fn
+    fn(spark, sf_dir)  # the first load of each table infers its schema
+    jobs, _ = _jobs(spark, lambda: fn(spark, sf_dir))
+    assert jobs == 0
+
+
+def test_reload_of_unchanged_table_launches_no_jobs(spark, sf_dir):
+    load_table(spark, sf_dir, "lineitem")
+    jobs, df = _jobs(spark, lambda: load_table(spark, sf_dir, "lineitem"))
+    assert jobs == 0
+    assert "l_orderkey" in df.columns
+
+
+def test_rewritten_table_reloads_with_its_new_schema(spark, tmp_path):
+    path = str(tmp_path / "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": [0, 1]}), path)
+    assert load_table(spark, str(tmp_path), "region").columns == ["r_regionkey"]
+    pq.write_table(
+        pa.table({"r_regionkey": [0, 1], "r_name": ["AFRICA", "AMERICA"]}), path
+    )
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name"]
+    assert sorted(map(tuple, df.collect())) == [(0, "AFRICA"), (1, "AMERICA")]
+
+
+def test_min_label_cycle_launches_at_most_eight_jobs(spark, monkeypatch):
+    from severless_data_pipeline_aws_spark.operators.dedup import (
+        min_label_components,
+    )
+
+    # a path 0-1-...-40 needs several cycles (two hops + a pointer jump each)
+    pairs = [(i, i + 1) for i in range(40)]
+    edges = spark.createDataFrame(
+        pairs + [(b, a) for a, b in pairs], "src bigint, dst bigint"
+    )
+    marks = []  # next job id after each checkpoint: the edges, then one per cycle
+    cls = type(edges)
+    checkpoint = cls.localCheckpoint
+
+    def counted(self, *args, **kwargs):
+        out = checkpoint(self, *args, **kwargs)
+        marks.append(_next_job(spark))
+        return out
+
+    monkeypatch.setattr(cls, "localCheckpoint", counted)
+    comps = min_label_components(edges)
+    monkeypatch.undo()
+    cycles = [b - a for a, b in zip(marks, marks[1:])]
+    assert len(cycles) >= 3, cycles
+    assert max(cycles) <= 8, cycles
+    assert {r["component"] for r in comps.collect()} == {0}

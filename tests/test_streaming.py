@@ -1798,3 +1798,37 @@ def test_reservoir_steps_semilattice_order_and_duplicate_invariance():
         {(h, e) for e, h in pairs}, key=lambda he: (he[0] & _U64, he[1])
     )[:4]
     assert json.loads(s_all)["items"] == [list(p) for p in want]
+
+
+def test_replay_timeout_survives_a_failing_stop():
+    """A replay that does not drain raises the drain timeout, even when
+    stopping the stream fails too (the stop error is only its cause)."""
+    from severless_data_pipeline_aws_spark.streaming.queries import (
+        _run_to_memory,
+    )
+
+    class Query:
+        def awaitTermination(self, timeout):
+            return False
+
+        def stop(self):
+            raise TimeoutError("stop timed out")
+
+    class Writer:
+        def __getattr__(self, name):
+            return lambda *args, **kwargs: Query() if name == "start" else self
+
+    class Conf(dict):
+        def set(self, key, value):
+            self[key] = value
+
+    class Stream:
+        writeStream = Writer()
+
+        class sparkSession:
+            conf = Conf({"spark.sql.shuffle.partitions": "4"})
+
+    with pytest.raises(RuntimeError, match="did not drain") as info:
+        _run_to_memory(Stream(), "append")
+    assert isinstance(info.value.__cause__, TimeoutError)
+    assert Stream.sparkSession.conf["spark.sql.shuffle.partitions"] == "4"
