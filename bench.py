@@ -1,28 +1,40 @@
-"""Benchmark: run the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE JSON
-line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"""Benchmark: run the 130 headline queries at $SPARK_GRAFT_SF_DIR (default
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE JSON line.
 
 Each query is executed through the noop sink
 (``df.write.format("noop")``) so the full plan is paid for — a bare
 ``count()`` would let Catalyst prune projected columns that nothing
 references, under-measuring projection/expression cost.
+
+Fields of the printed line (also written to BENCH_FULL.json):
+
+- ``metric``, ``value`` (total seconds), ``unit``, ``queries``
+  ({name: best-of-3 seconds}) and ``sf`` — the one-line contract;
+- ``n_queries`` and ``r01_comparable_total`` (the first five queries);
+- provenance: ``cpus`` (local[N] cores), ``nproc`` (host CPUs available
+  to this process), ``git_sha`` and ``spark_version``;
+- ``regressions``: queries more than 1.5x slower than in the committed
+  record (``HEAD:BENCH_FULL.json``), compared only when that record ran
+  with the same ``cpus`` and ``sf``; otherwise ``{}`` and
+  ``prior_skipped`` says why.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
 
 from severless_data_pipeline_aws_spark import registry
 from severless_data_pipeline_aws_spark.session import get_spark
 
-#: headline set — exercised per-round by the driver; keep it representative
-#: (scan-heavy agg, join, window, top-k, dedup, similarity) but bounded.
+#: headline set — fixed, representative (scan-heavy agg, join, window,
+#: top-k, dedup, similarity) and bounded.
 HEADLINE = [
     "flagship_revenue_by_status_year",
     "filter_project_lineitem",
@@ -139,10 +151,7 @@ HEADLINE = [
     "window_aroon_indicator",
     "graph_jaccard_link_prediction",
     "text_lexical_diversity_ttr",
-    # round-7 rotation names, folded in (ledger pattern): the interval
-    # anti-join, SAX symbolization, RSI, INTERSECT, TPC-H q3/q16, the
-    # null-scalar battery, the language-balanced mixture sampler, the
-    # 3-step path miner, and the incremental MV refresh
+    # round-7 additions
     "join_interval_blackout_anti",
     "timeseries_sax_symbolic",
     "window_rsi_indicator",
@@ -153,10 +162,7 @@ HEADLINE = [
     "sampling_lang_balanced_mixture",
     "funnel_top_paths_3step",
     "cdc_incremental_mv_refresh",
-    # round-8 rotation names, folded in (ledger pattern): the Python
-    # UDTF chunker, the 168-cell heatmap, MACD, EXCEPT, the lateral
-    # top-n decorrelation, TPC-H q6/q17, null ordering, exactly-k
-    # sampling, and the padding-waste range join
+    # round-8 additions
     "udf_python_udtf_chunks",
     "agg_weekday_hour_heatmap",
     "timeseries_macd_crossover",
@@ -167,11 +173,7 @@ HEADLINE = [
     "null_ordering_first_last",
     "sampling_fixed_k_per_group",
     "pipeline_length_bucket_padding_waste",
-    # round-9 rotation names, folded in (ledger pattern): the Lorenz
-    # decile closed form, Pareto revenue concentration, iterative
-    # k-core peeling, the MP4 box walk, Neyman allocation, LSH ANN,
-    # the HLL audience-intersection audit, the trained quality
-    # classifier, TPC-H q15, and fractal swing points
+    # round-9 additions
     "agg_lorenz_curve_deciles",
     "funnel_pareto_revenue_concentration",
     "graph_kcore_decomposition",
@@ -182,10 +184,7 @@ HEADLINE = [
     "text_quality_classifier_score",
     "tpch_q15_top_supplier",
     "window_fractal_swing_points",
-    # round-10 rotation names, folded in (ledger pattern): the clean
-    # 9b53a18 rotation (Misra-Gries, hard negatives, quality score,
-    # BMP resize, degree distribution, DAU stickiness, chandelier,
-    # TPC-H q8, preference pairs, WARC extract) ...
+    # round-10 additions
     "streaming_misra_gries_heavy_hitters",
     "similarity_hard_negative_mining",
     "text_quality_score",
@@ -196,8 +195,7 @@ HEADLINE = [
     "tpch_q8_market_share",
     "pipeline_preference_pairs",
     "pipeline_warc_record_extract",
-    # ... plus the r10-continuation rotation (re-recorded clean in the
-    # r11 snapshot repair — see BENCH_FULL_r10.json repair note)
+    # round-10 continuation additions
     "dashboard_rate_volume_decomposition",
     "dedup_connected_components",
     "funnel_window_funnel_levels",
@@ -207,11 +205,7 @@ HEADLINE = [
     "text_html_boilerplate_strip",
     "tpch_q7_volume_shipping",
     "window_elder_ray_power",
-    # round-11 driver-capture rotation names, folded in (ledger
-    # pattern): dynamic pivot, sliding median, temperature mixture,
-    # audience overlap, Dixon Q, VARIANT JSON, date-sequence DQ, the
-    # MinHash streaming signature, the banding-curve audit, and the
-    # retrieval-eval precision/recall harness
+    # round-11 additions
     "agg_pivot_dynamic",
     "window_median_sliding",
     "sampling_temperature_mixture",
@@ -222,6 +216,17 @@ HEADLINE = [
     "streaming_minhash_source_signature",
     "dedup_minhash_estimate_audit",
     "similarity_eval_precision_recall",
+    # round-12 additions; the set is fixed from here on
+    "window_rolling_sharpe_ratio",
+    "stats_brown_forsythe_variance",
+    "scalar_bitwise_ops",
+    "geo_point_in_polygon_fence",
+    "streaming_spacesaving_topk",
+    "dedup_connected_components_star",
+    "text_sentence_length_stats",
+    "multimodal_magic_mime_classify",
+    "graph_reciprocity_density",
+    "window_drawdown_from_peak",
 ]
 
 
@@ -230,652 +235,109 @@ def _run(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-#: r6 verdict #6 — how many never-benched queries join the headline
-#: each round (ledger-driven, like the driver-sample rotation): walk
-#: the committed BENCH_r*.json artifacts for every query name that has
-#: ever carried a timing, then take the first N never-benched names in
-#: the registry's interleaved order (deterministic, spans modules).
-_ROTATION_ADDS = 10
+def _release(spark) -> None:
+    """Drop what the last query left in the session, so later queries are
+    not timed under another query's memory pressure and none can read a
+    view another query created."""
+    spark.catalog.clearCache()
+    # clearCache only empties the CacheManager; localCheckpoint blocks
+    # stay in the block manager for the session
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist()
+    # the unpersist above strands any temp view over the dropped blocks
+    # (localCheckpoint truncates lineage). Listing the global_temp
+    # database returns global and session-local temp views alike.
+    global_temp = spark.conf.get("spark.sql.globalTempDatabase")
+    for view in spark.catalog.listTables(global_temp):
+        if view.namespace == [global_temp]:
+            spark.catalog.dropGlobalTempView(view.name)
+        elif view.isTemporary:
+            spark.catalog.dropTempView(view.name)
 
 
-def _ever_benched() -> set[str]:
-    """Every query name that ever carried a bench timing.
-
-    Reads the committed-complete BENCH_FULL_r{N}.json snapshots FIRST
-    (the r8 fix — the truncated BENCH_r*.json driver captures hid r7's
-    rotation names, so r8 initially re-picked the same 10 instead of 10
-    fresh ones), then falls back to the driver captures, salvaging
-    clipped ``tail`` fragments the same way _prior_timings does."""
-    import glob
-    import subprocess
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    _top_level = {"value", "sf", "r01_comparable_total", "n_queries", "n", "rc", "cpus"}
-    out: set[str] = set(HEADLINE)
-    for path in glob.glob(os.path.join(here, "BENCH_FULL_r*.json")):
-        try:
-            with open(path) as fh:
-                out.update(json.load(fh).get("queries") or {})
-        except Exception:
-            continue
+def _git(*args: str) -> str | None:
+    """Stdout of ``git -C <repo> args``, or None outside a git checkout."""
     try:
         run = subprocess.run(
-            ["git", "-C", here, "show", "HEAD:BENCH_FULL.json"],
-            capture_output=True,
-            text=True,
-            timeout=30,
+            ["git", "-C", _HERE, *args], capture_output=True, text=True, timeout=30
         )
-        if run.returncode == 0:
-            out.update(json.loads(run.stdout).get("queries") or {})
-    except Exception:
-        pass
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        try:
-            with open(path) as fh:
-                doc = json.load(fh)
-        except Exception:
-            continue
-        queries = (doc.get("parsed") or doc).get("queries") or _salvage_tail(doc)
-        out.update(k for k in queries if k not in _top_level)
-    return out
-
-
-def _rotation_queries(specs) -> list[str]:
-    benched = _ever_benched()
-    fresh = [n for n in specs if n not in benched]
-    return fresh[:_ROTATION_ADDS]
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="bench")
-    specs = registry.load_all()
-    rotation = _rotation_queries(specs)
-    names = [n for n in HEADLINE if n in specs] + rotation
-    if not names:
-        raise SystemExit("no headline queries found in registry")
-    # warm the JVM + parquet footers once with the cheapest query
-    _run(specs[names[0]].fn(spark, sf_dir))
-
-    timings: dict[str, float] = {}
-    for name in names:
-        # best-of-3: the first run pays one-off costs (codegen compile,
-        # parquet footer cache, broadcast build) that a steady-state
-        # cluster amortizes, and this host's shared CPUs add +-50%
-        # run-to-run noise; the min is the honest per-query cost
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            _run(specs[name].fn(spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 4)
-        # drop caches/persists a query built so later queries are not
-        # timed under another query's memory pressure (a steady-state
-        # cluster would not carry a stranger's cache either)
-        spark.catalog.clearCache()
-        # r11: clearCache only empties the CacheManager — localCheckpoint
-        # blocks (the iterative/eval queries' materialized intermediates)
-        # stay in the block manager for the session and were taxing every
-        # later query's memory; drop those too, same isolation policy
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
-        # r12 (advice): the unpersist above strands any temp view whose
-        # backing blocks it just dropped (localCheckpoint truncates
-        # lineage, so a stale view would be unrecoverable, not merely
-        # recomputable). No query may read a view another query created;
-        # drop them so the invariant is enforced, not assumed. Global
-        # temp views too: listing the global_temp database returns them
-        # along with the session's local temp views.
-        global_temp = spark.conf.get("spark.sql.globalTempDatabase")
-        for view in spark.catalog.listTables(global_temp):
-            if view.namespace == [global_temp]:
-                spark.catalog.dropGlobalTempView(view.name)
-            elif view.isTemporary:
-                spark.catalog.dropTempView(view.name)
-
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    r01_set = HEADLINE[:5]  # the round-1 headline set, for like-for-like deltas
-    prior = _prior_timings()
-    notes, dropped = _current_notes(timings, prior)
-    doc = {
-        "metric": "headline_query_wall_time",
-        "value": round(sum(timings.values()), 4),
-        "unit": "sec",
-        "queries": timings,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "r01_comparable_total": round(
-            sum(t for n, t in timings.items() if n in r01_set), 4
-        ),
-        "n_queries": len(timings),
-        # never-benched names folded in this round (ledger-driven
-        # rotation, r6 verdict #6) — first-time entries, no prior to
-        # ratchet against
-        "rotation_queries": rotation,
-        # how many complete prior timings the ratchet saw (r7 verdict
-        # wrong#1: the truncated BENCH_r*.json tails covered only ~1/3
-        # of the headline set; the BENCH_FULL_r{N} snapshots cover all)
-        "prior_n_queries": len(prior),
-        "regressions": _regressions(timings, prior),
-        # context for known round-over-round deltas, so a flagged
-        # regression is read against its cause (see EXPLAIN.md). Notes
-        # are self-checked: a note whose key did not move >1.4x in THIS
-        # round's comparison is dropped and recorded, so a stale note
-        # can never ride along on a new number (round-4 verdict #10).
-        "regression_notes": notes,
-        "stale_notes_dropped": dropped,
-        "r01_drift_note": _R01_DRIFT_NOTE,
-        "prefix_jaccard_closure_note": _PREFIX_JACCARD_CLOSURE_NOTE,
-        "r7_ratchet_gap_note": _R7_RATCHET_GAP_NOTE,
-        "scale_sweep": _scale_sweep_summary(),
-    }
-    # --- clean-window guard (r10 verdict wrong#1, machine-enforced) ----
-    # The degraded-host signature is UNIFORM inflation across untouched
-    # plans: a capture whose median per-query ratio vs the prior clean
-    # snapshot exceeds 1.15 is a degraded window, and must never become
-    # the round's artifact of record (r10's 112s capture overwrote the
-    # clean 77.2s record exactly this way). The one-line stdout contract
-    # and the scratch BENCH_FULL.json still happen — only the per-round
-    # BENCH_FULL_r{N}.json snapshot write is refused, so the ratchet
-    # prior can never be poisoned again. tests/test_docs_consistency.py
-    # asserts the committed snapshots honor this bound.
-    doc["median_ratio_vs_prior"] = _median_ratio(timings, prior)
-    degraded = (
-        doc["median_ratio_vs_prior"] is not None
-        and doc["median_ratio_vs_prior"] > _CLEAN_WINDOW_MEDIAN_MAX
-    )
-    doc["degraded_window"] = degraded
-    # The driver captures stdout with a length limit that truncated the
-    # round-4 artifact (BENCH_r04.json parsed:null, ~19 timings lost —
-    # round-4 verdict wrong#1). Persist the complete document to a
-    # committed file FIRST so the record survives any capture clipping;
-    # stdout still carries the contractual one-line JSON.
-    here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "BENCH_FULL.json"), "w") as fh:
-        json.dump(doc, fh, indent=1)
-        fh.write("\n")
-    # per-round complete snapshot — the regression ratchet's prior
-    # source (r7 verdict wrong#1). Overwriting within a round is fine
-    # (last run is the round's record); _prior_timings excludes the
-    # current round's own snapshot. A degraded-window capture is NOT
-    # allowed to become the record (r10 verdict wrong#1).
-    if degraded:
-        print(
-            "bench: degraded window (median ratio %.3f > %.2f) — "
-            "BENCH_FULL_r{N}.json snapshot NOT written; re-run in a "
-            "quiet window to record the round"
-            % (doc["median_ratio_vs_prior"], _CLEAN_WINDOW_MEDIAN_MAX),
-            file=sys.stderr,
-        )
-    else:
-        try:
-            snap = "BENCH_FULL_r%02d.json" % registry._round_number(here)
-            with open(os.path.join(here, snap), "w") as fh:
-                json.dump(doc, fh, indent=1)
-                fh.write("\n")
-        except Exception:
-            pass
-    print(json.dumps(doc))
-    spark.stop()
-
-
-#: candidate round-over-round notes; emitted ONLY if the key moved >1.4x
-#: (either direction) in the current comparison — see _current_notes.
-_NOTE_CANDIDATES = {
-    "tpch_q6_forecast_revenue": (
-        "r9's driver post-close capture (BENCH_FULL_r10.json, 79.7s total "
-        "vs the committed 70.1s record — mild global host drift) flagged "
-        "0.145->0.497s (3.42x) with no note (r9 verdict wrong#1). r10 "
-        "isolated min-of-5 at sf0.1: [4.521, 0.410, 0.376, 0.366, 0.381] "
-        "-> 0.366s, matching the judge's own loaded-host min-of-5 "
-        "(0.357s). The 0.145s prior is this query's fastest-ever point "
-        "(a single-scan filter-agg untouched since r1; multi-round "
-        "in-suite envelope 0.14-0.50s) — the ratio is measured from the "
-        "envelope floor, same signature as the six movers r9 closed. "
-        "Sub-second absolute, plan unchanged. Watch closed with numbers; "
-        "re-examine only if a quiet-window suite run exceeds 0.6s."
-    ),
-    "window_concurrency_from_intervals": (
-        "r4 flagged 0.55->2.98s (5.4x) on an unchanged two-pass bucket-offset "
-        "plan; r5 re-bench min-of-5 at sf0.1: [1.35, 1.07, 0.91, 0.83, 0.80] "
-        "-> 0.80s, and the ~sf1 sweep ran the same query in 1.45s on 10x the "
-        "data — the r4 point was host variance, not a plan defect. Watch "
-        "closed (r4 verdict #4)."
-    ),
-    "funnel_market_basket_lift": (
-        "plan unchanged since r2 (map-side pair explode); sf1 sweep shows 5.75s "
-        "at 10x data (~3.6x scaling, sub-linear in pair space) — round-to-round "
-        "deltas at bench SF are this host's +-50 percent shared-CPU variance"
-    ),
-    "window_cumulative_distinct": (
-        "r5 flagged 0.50->0.71s (1.43x, the round's only >1.4x mover) on an "
-        "unchanged plan; r6 re-bench min-of-5 at sf0.1: [1.16, 0.64, 0.59, "
-        "0.52, 0.53] -> 0.52s, back at the r4 level. Watch closed as host "
-        "variance (r5 verdict #7)."
-    ),
-    "dedup_allpairs_prefix_jaccard": (
-        "r11 (vs the CLEAN restored r10 prior 3.94s — the degraded "
-        "overwrite is adjudicated in BENCH_FULL_r10.json's repair "
-        "note): driver capture read 6.21s (1.58x); r11 isolated "
-        "min-of-5 x2 at sf0.1: [22.9, 23.0, 19.9, 14.2, 10.4] and "
-        "[24.0, 8.7, 5.6, 6.8, 6.2] -> 5.57s floor, 1.42x the r10 "
-        "clean in-suite value and inside the 1.4x band of the r7 "
-        "isolated floor (3.88s) given this round's uniformly elevated "
-        "host (the whole r11 driver capture read median 1.137x the "
-        "clean prior). dedup.py r11 diffs are appended operators only; "
-        "plan unchanged, sf1 sweep exponent sub-linear. Host variance; "
-        "re-examine only if a quiet-window suite run exceeds 6.5s."
-    ),
-    "setop_except_all": (
-        "r11: driver capture flagged 0.243->0.367s (1.51x vs the clean "
-        "restored r10 prior) during the same uniformly elevated window "
-        "(capture median 1.137x). Isolated min-of-5 x2 at sf0.1: "
-        "[6.04, 0.97, 0.83, 0.65, 0.56] and [5.71, 0.76, 0.70, 0.56, "
-        "0.46] -> 0.461s floor vs the r8 isolated floor 0.387s (1.19x "
-        "— inside host variance). Two-scan EXCEPT ALL plan untouched "
-        "since r4. Sub-second absolute, host variance; watch closed."
-    ),
-    "text_lexical_diversity_ttr": (
-        "r8 flagged 0.325->0.578s (1.78x) by the FIXED full-prior ratchet "
-        "on an unchanged plan (query untouched since r6; text.py diffs this "
-        "round are appended operators only). r8 isolated min-of-5 at sf0.1: "
-        "[0.892, 0.761, 0.716, 0.598, 0.567] -> 0.567s — the move tracked "
-        "the WHOLE headline set during a degraded same-day host window "
-        "(totals 65.7->82.7s across four runs, zero plan changes), and the "
-        "quiet-window run read 0.388s (1.19x, self-dropping this note). "
-        "Shared-CPU load, not this query's plan. On watch for r9."
-    ),
-    "tpch_q21_sole_returned_supplier": (
-        "r7 moved 0.84->1.61s (1.93x) unseen by the then-truncated "
-        "ratchet prior (r7 verdict wrong#1); r8 isolated min-of-5 at "
-        "sf0.1: [1.85, 1.50, 1.25, 1.13, 1.06] -> 1.06s; r9 flagged "
-        "again in-suite (1.42-1.63s across degraded-window attempts) "
-        "and re-closed isolated min-of-5: [3.83, 1.60, 1.05, 1.07, "
-        "1.00] -> 1.00s — back inside the 0.80-1.17s band this query "
-        "has held over seven rounds on an unchanged plan. This 5-join "
-        "shape is the suite's most host-sensitive query; the isolated "
-        "floor, not the in-suite point, is its honest cost."
-    ),
-    "stats_ljung_box": (
-        "r11: driver capture flagged 0.644->1.004s (1.56x vs the clean "
-        "restored r10 prior; capture median 1.137x — the uniform host "
-        "signature). Isolated min-of-5 x2 at sf0.1: [11.8, 1.46, 1.08, "
-        "1.27, 1.05] and [7.9, 1.29, 1.53, 0.96, 0.86] -> 0.859s floor "
-        "— BELOW the r9 isolated floor (0.894s) on the same unchanged "
-        "plan (five-lag 17-sum single window, untouched since r5). "
-        "Host variance; watch closed with numbers."
-    ),
-    "window_anchored_vwap": (
-        "r9 flagged 0.795->1.198s (1.51x) in the committed best-of-11 "
-        "capture; isolated min-of-5 at sf0.1: [1.51, 1.00, 1.04, 1.13, "
-        "0.988] -> 0.988s, 1.24x the r8 prior — inside the day's "
-        "uniform 1.2-1.5x host inflation (see stats_ljung_box note). "
-        "DECIMAL cumulative-window plan untouched since r5. Watch "
-        "closed as host variance."
-    ),
-    "stats_permutation_test_means": (
-        "r11: driver capture flagged 1.44->3.27s (2.27x vs the clean "
-        "restored r10 prior — the round's largest mover after "
-        "join_bloom). Isolated min-of-5 x2 at sf0.1: [11.2, 2.49, "
-        "2.02, 2.71, 1.92] and [10.2, 2.51, 2.15, 1.96, 2.30] -> "
-        "1.925s floor, 1.24x the r9 isolated floor (1.55s) on an "
-        "unchanged 32-conditional-aggregate single pass (untouched "
-        "since r4) — inside the round's uniform 1.14-1.3x host "
-        "elevation. Watch continues: re-examine if a quiet-window "
-        "round exceeds 2.5s isolated."
-    ),
-    "text_chunk_sliding_windows": (
-        "r7 moved 0.30->0.46s (1.55x) unseen by the then-truncated "
-        "ratchet prior (r7 verdict wrong#1); r8 isolated min-of-5 at "
-        "sf0.1: [0.53, 0.36, 0.42, 0.40, 0.41] -> 0.36s, back inside "
-        "the prior band on an unchanged explode-heavy plan (text.py "
-        "chunker untouched in r7/r8). Host variance; watch closed."
-    ),
-    "cdc_upsert_orders_snapshot": (
-        "r8's now-complete ratchet flagged 0.349->0.53s (1.53x); "
-        "isolated min-of-5: [1.11, 0.81, 0.70, 0.61, 0.58] -> 0.58s. "
-        "Multi-round envelope on an unchanged plan: 0.43, 0.42, 0.40, "
-        "0.349 (r4-r7) — the r7 prior was this query's fastest-ever "
-        "point, so the ratio is measured from the envelope floor. "
-        "cdc.py untouched in r8. Host variance vs a fast prior; "
-        "re-examine only if a future round exceeds 0.9s isolated."
-    ),
-    "timeseries_holt_winters_additive": (
-        "r11: driver capture flagged 0.293->0.562s (1.91x vs the clean "
-        "restored r10 prior). Isolated min-of-5 x2 at sf0.1: [8.9, "
-        "1.01, 0.84, 0.66, 0.68] and [10.3, 1.30, 1.27, 1.00, 1.01] "
-        "-> 0.658s floor vs the r8 isolated floor 0.44s (1.5x) — but "
-        "the r10 prior 0.293 is this query's all-time in-suite floor "
-        "(history 0.42/0.39/0.34/0.28/0.35/0.30/0.29 across r4-r10), "
-        "so the ratio is measured from the envelope floor during a "
-        "uniformly elevated window. Arrow applyInPandas recurrence "
-        "untouched since r4. Host variance; re-examine only if a "
-        "quiet-window round exceeds 0.9s isolated."
-    ),
-    "dq_referential_integrity_audit": (
-        "r8's now-complete ratchet flagged 1.11->1.71s (1.54x); "
-        "isolated min-of-5: [1.84, 1.90, 1.85, 1.65, 1.77] -> 1.65s, "
-        "the exact r5 in-suite value (history 1.65, 1.43, 1.11 across "
-        "r5-r7). 7-edge join-audit union plan untouched in r8; the r7 "
-        "prior was the envelope floor. Host variance; watch closed."
-    ),
-    # --- r9: closure notes for the 6 movers BENCH_FULL_r09.json flagged
-    # from the driver's post-close degraded-host capture (r8 verdict
-    # wrong#2). That window was uniform 1.3-1.5x across dozens of
-    # untouched plans — including a 1.53x on the trivial scan-filter
-    # below, the host-signature tell. Each note carries the standard
-    # isolated min-of-5 at sf0.1 (fresh session, only that query).
-    "filter_project_lineitem": (
-        "degraded-window capture flagged 0.196->0.300s (1.53x) on the "
-        "TRIVIAL scan-filter — no shuffle, no join, pushed predicates "
-        "only, untouched since r1. r9 isolated min-of-5 at sf0.1: "
-        "[0.382, 0.288, 0.313, 0.296, 0.337] -> 0.288s, the r7 in-suite "
-        "value (0.293); the r8 prior 0.196 was the envelope floor. A "
-        "1.5x move on a plan this simple IS the host signature. Watch "
-        "closed."
-    ),
-    "funnel_cohort_retention": (
-        "degraded-window capture flagged 0.285->0.437s (1.53x); r9 "
-        "isolated min-of-5 at sf0.1: [2.037, 0.682, 0.537, 0.481, "
-        "0.457] -> 0.457s, back at the r7 in-suite level (0.425); the "
-        "r8 prior 0.285 was the envelope floor. Windowless cohort-"
-        "matrix plan untouched since r2. Host variance; watch closed."
-    ),
-    "funnel_rfm_segmentation": (
-        "degraded-window capture flagged 1.004->1.510s (1.50x); r9 "
-        "isolated min-of-5 at sf0.1: [2.392, 1.387, 1.255, 1.327, "
-        "1.105] -> 1.105s, back inside the r7-r8 band (0.933-1.004s). "
-        "Bucket-offset NTILE plan untouched since r3. Host variance; "
-        "watch closed."
-    ),
-    "stats_cusum_drift_detector": (
-        "degraded-window capture flagged 0.454->0.784s (1.73x); r9 "
-        "isolated min-of-5 at sf0.1: [0.822, 0.550, 0.493, 0.452, "
-        "0.480] -> 0.452s — EXACTLY the r8 in-suite value (0.4544). "
-        "Chained-window CUSUM plan untouched since r2. Host variance; "
-        "watch closed."
-    ),
-    "sampling_train_val_test_exact": (
-        "r11: driver capture flagged 0.374->0.728s (1.95x vs the clean "
-        "restored r10 prior). Isolated min-of-5 x2 at sf0.1: [7.4, "
-        "1.35, 1.07, 0.87, 0.84] and [11.6, 2.07, 1.56, 1.74, 1.91] "
-        "-> 0.836s floor vs the r9 isolated floor 0.401s — 2.1x, the "
-        "round's one isolated floor clearly above its own history, on "
-        "a bucket-offset splitter plan untouched since r7. The move "
-        "tracked the whole uniformly elevated capture (median 1.137x) "
-        "and the second isolated run disagreed with the first by 1.9x "
-        "on the same plan — shared-CPU contention, not a plan defect. "
-        "ON WATCH for r12: if a quiet-window isolated floor still "
-        "exceeds 0.6s, read the plan before believing the host story."
-    ),
-    "join_bloom_prefilter_semireduction": (
-        "r11: driver capture flagged 0.402->1.313s (3.26x vs the clean "
-        "restored r10 prior — the round's largest mover). Isolated "
-        "min-of-5 x2 at sf0.1: [8.1, 1.75, 1.26, 0.96, 0.82] and "
-        "[7.1, 1.32, 1.05, 0.91, 0.83] -> 0.819s floor, 2.0x the "
-        "r7-r10 in-suite band (0.34-0.41s). The plan is unchanged "
-        "(bloom build + pre-shuffle fact filter, untouched since r4) "
-        "and the move tracked the whole uniformly elevated window "
-        "(capture median 1.137x; both isolated runs agree within 2%, "
-        "so the floor is real for THIS host state). A bloom-filter "
-        "build is pure CPU under memory-bandwidth pressure — the "
-        "first victim of a noisy neighbor. ON WATCH for r12: if a "
-        "quiet-window isolated floor still exceeds 0.6s, re-read the "
-        "plan (has the bloom expected-item count drifted with "
-        "registry growth?) before closing as host variance."
-    ),
-    "graph_resource_allocation_link_prediction": (
-        "degraded-window capture flagged 1.974->3.343s (1.69x); r9 "
-        "isolated min-of-5 at sf0.1: [3.703, 3.101, 3.127, 2.433, "
-        "2.287] -> 2.287s vs the r7-r8 band 1.834-1.974s (1.16x the "
-        "r8 prior — inside host variance). Plan unchanged (r8 judge "
-        "plan-read: BroadcastHashJoin + TakeOrdered) and the ~sf1 "
-        "sweep exponent is 0.70, sub-linear — not a plan defect. "
-        "Watch closed; re-examine only if a future round exceeds "
-        "3.0s isolated min-of-5."
-    ),
-}
-
-#: r5 verdict #8 — the r1-comparable 5-query total crept 1.71 -> 1.98 ->
-#: 2.18 -> 2.43s across r2-r5, three rounds monotone. Round-6 isolated
-#: min-of-5 re-run of exactly those 5 queries (fresh session, nothing
-#: else timed): flagship [1.53,1.15,1.07,1.18,1.05] + the other four ->
-#: total 1.85s, right back inside the r2-r3 band. The drift was not a
-#: per-round fixed overhead (the r01 queries run FIRST in the suite and
-#: their plans are unchanged); it is the min-of-3 estimator under this
-#: host's +-50% shared-CPU noise — 3 reps sample the noise floor too
-#: coarsely, and the suite-embedded minima drift upward as neighboring
-#: rounds land on busier hosts. Closed as variance, with this field as
-#: the committed evidence; if a future round's in-suite r01 total
-#: exceeds 2.6s, re-run scripts/ drift probe before believing it.
-_R01_DRIFT_NOTE = (
-    "r2-r5 monotone creep 1.71->1.98->2.18->2.43s closed as min-of-3 "
-    "sampling noise: r6 isolated min-of-5 of the same 5 queries = 1.85s "
-    "(flagship 1.05s), inside the r2-r3 band; plans unchanged."
-)
-
-#: r6 verdict #4 — the 2.89->4.42s (1.53x) flag shipped without a
-#: closure note. Closed in r7 with numbers: isolated min-of-5 at sf0.1
-#: = [14.06, 5.17, 5.09, 3.94, 3.88] -> 3.88s, in-suite r7 bench
-#: 3.25s (back inside the 1.4x band of every prior round, so the
-#: conditional _NOTE_CANDIDATES entry self-pruned as designed);
-#: dedup.py untouched since the query landed, sf1 sweep exponent
-#: 0.998 (sub-linear). Host variance, not a plan defect.
-_PREFIX_JACCARD_CLOSURE_NOTE = (
-    "r6 flagged 2.89->4.42s (1.53x) with no note; r7 isolated min-of-5 "
-    "= 3.88s and the in-suite run measured 3.25s — back inside every "
-    "prior round's 1.4x band (plan unchanged, sf1 exponent 0.998). "
-    "Watch closed."
-)
-
-#: r7 verdict wrong#1 — the ratchet's prior source was the truncated
-#: BENCH_r*.json stdout captures, so tpch_q21 (0.84->1.61s, 1.93x) and
-#: text_chunk_sliding_windows (0.30->0.46s, 1.55x) crossed 1.5x with
-#: regressions={}. Fixed in r8: _prior_timings reads the committed
-#: per-round BENCH_FULL_r{N}.json snapshots (71/71 prior timings
-#: visible), and both missed movers got the standard isolated min-of-5
-#: closure (q21 1.06s, chunker 0.36s — both back in band, plans
-#: untouched; see _NOTE_CANDIDATES).
-_R7_RATCHET_GAP_NOTE = (
-    "ratchet prior now reads committed BENCH_FULL_r{N}.json snapshots "
-    "(all 71 prior timings) instead of truncated BENCH_r*.json tails; "
-    "both r7 missed movers re-benched min-of-5 and closed as host "
-    "variance (tpch_q21 1.06s, text_chunk_sliding_windows 0.36s)."
-)
-
-
-#: a suite capture whose MEDIAN per-query ratio vs the prior clean
-#: snapshot exceeds this is a degraded host window (uniform inflation),
-#: not a set of real regressions — r9's windows read 1.2-1.5x, r10's
-#: overwrite read 1.335; clean round-over-round medians sit at 0.95-1.1.
-_CLEAN_WINDOW_MEDIAN_MAX = 1.15
-
-
-def _median_ratio(
-    timings: dict[str, float], prior: dict[str, float]
-) -> float | None:
-    """Median of per-query now/prior over the shared query set; None
-    when fewer than 20 shared timings (first rounds, tiny runs)."""
-    import statistics
-
-    ratios = [
-        now / prior[n]
-        for n, now in timings.items()
-        if prior.get(n) and prior[n] > 0
-    ]
-    if len(ratios) < 20:
+    except (OSError, subprocess.SubprocessError):
         return None
-    return round(statistics.median(ratios), 4)
+    return run.stdout if run.returncode == 0 else None
 
 
-def _current_notes(
-    timings: dict[str, float], prior: dict[str, float]
-) -> tuple[dict[str, str], list[str]]:
-    """Self-check the note table: keep a note only when its query moved
-    >1.4x (up or down) vs the prior recorded round. With no prior data
-    for a key, the note is kept (it cannot be verified stale)."""
-    notes, dropped = {}, []
-    for name, note in _NOTE_CANDIDATES.items():
-        now, before = timings.get(name), prior.get(name)
-        if now is None:
-            continue
-        if before and max(now / before, before / now) <= 1.4:
-            dropped.append(name)
-        else:
-            notes[name] = note
-    return notes, dropped
-
-
-def _scale_sweep_summary() -> dict | None:
-    """Latest recorded ~sf1 sweep (scripts/scale_sweep.py): the 10x
-    proof that the bucket-offset rewrites hold beyond bench SF. Run
-    fresh with SPARK_GRAFT_SCALE_DIR=<dir of make_scale_data.py output>;
-    otherwise the last recorded SCALE_SWEEP_r*.json is summarized so
-    every bench line carries the scale evidence."""
-    import glob
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    live_dir = os.environ.get("SPARK_GRAFT_SCALE_DIR")
-    if live_dir:
-        import subprocess
-
-        run = subprocess.run(
-            [sys.executable, os.path.join(here, "scripts", "scale_sweep.py"), live_dir],
-            capture_output=True, text=True, timeout=3600,
-        )
-        try:
-            return json.loads(run.stdout.strip().splitlines()[-1])
-        except Exception:
-            return {"error": run.stderr[-500:]}
-    recorded = sorted(glob.glob(os.path.join(here, "SCALE_SWEEP_r*.json")))
-    if not recorded:
-        return None
+def _prior(doc: dict, committed: str | None) -> tuple[dict[str, float], str | None]:
+    """Per-query timings of the committed record, or ``({}, reason)`` when
+    there is none or it ran with other ``cpus`` or ``sf`` than ``doc``."""
+    if committed is None:
+        return {}, "no committed BENCH_FULL.json at HEAD"
     try:
-        with open(recorded[-1]) as fh:
-            doc = json.load(fh)
-        return {
-            "recorded": os.path.basename(recorded[-1]),
-            "sf_equiv": doc.get("sf_equiv"),
-            "total_sec": doc.get("value"),
-            "n_queries": len(doc.get("queries", {})),
-            "caps_ok": doc.get("caps_ok"),
-        }
-    except Exception:
-        return None
-
-
-def _prior_timings() -> dict[str, float]:
-    """Per-query timings of the most recent COMPLETE recorded round.
-
-    Preference order (r7 verdict wrong#1 — the old walk read only the
-    truncated driver stdout captures, whose ``tail`` fragments keep the
-    END of the queries object, leaving ~2/3 of the headline set
-    invisible to the regression ratchet):
-
-    1. ``BENCH_FULL_r{N}.json`` snapshots (complete per-query records
-       committed once per round), newest PRIOR round first — the
-       current round's own snapshot is excluded so a second bench run
-       in the same round still ratchets against the previous round.
-    2. The committed ``BENCH_FULL.json`` as of git HEAD (survives a
-       local run overwriting the on-disk copy mid-round).
-    3. The truncated ``BENCH_r*.json`` driver captures, salvaging the
-       ``tail`` fragment when the head was clipped (legacy fallback —
-       rounds before the r08 snapshot discipline).
-    """
-    import glob
-    import re as _re
-    import subprocess
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    try:
-        current = registry._round_number(here)
-    except Exception:
-        current = None
-    snaps = []
-    for path in glob.glob(os.path.join(here, "BENCH_FULL_r*.json")):
-        m = _re.fullmatch(r"BENCH_FULL_r(\d+)\.json", os.path.basename(path))
-        if not m:
-            continue
-        n = int(m.group(1))
-        if current is not None and n >= current:
-            continue
-        snaps.append((n, path))
-    for _, path in sorted(snaps, reverse=True):
-        try:
-            with open(path) as fh:
-                queries = json.load(fh).get("queries")
-            if queries:
-                return {k: float(v) for k, v in queries.items()}
-        except Exception:
-            continue
-    try:
-        run = subprocess.run(
-            ["git", "-C", here, "show", "HEAD:BENCH_FULL.json"],
-            capture_output=True,
-            text=True,
-            timeout=30,
-        )
-        if run.returncode == 0:
-            queries = json.loads(run.stdout).get("queries")
-            if queries:
-                return {k: float(v) for k, v in queries.items()}
-    except Exception:
-        pass
-    for path in sorted(glob.glob(os.path.join(here, "BENCH_r*.json")), reverse=True):
-        try:
-            with open(path) as fh:
-                doc = json.load(fh)
-        except Exception:
-            continue
-        queries = (doc.get("parsed") or doc).get("queries")
-        if queries:
-            return dict(queries)
-        salvaged = _salvage_tail(doc)
-        if salvaged:
-            return salvaged
-    return {}
-
-
-def _salvage_tail(doc: dict) -> dict[str, float]:
-    """Recover per-query timings from a clipped driver capture.
-
-    The driver's stdout limit keeps the END of the JSON line in a
-    ``tail`` field; two clip points are possible — inside the "queries"
-    object (wrap so the fragment re-opens doc + queries) or between
-    top-level keys (wrap the doc only)."""
-    _top_level = {"value", "sf", "r01_comparable_total", "n_queries", "n", "rc", "cpus"}
-    tail = doc.get("tail")
-    if not (isinstance(tail, str) and '": ' in tail):
-        return {}
-    for prefix in ('{"queries": {"__clipped_', '{"__clipped_'):
-        try:
-            salvaged = json.loads(prefix + tail.strip())
-        except Exception:
-            continue
-        inner = salvaged.get("queries", salvaged)
-        out = {
-            k: v
-            for k, v in inner.items()
-            if isinstance(v, (int, float)) and k not in _top_level
-            and not k.startswith("__clipped_")
-        }
-        if out:
-            return out
-    return {}
+        prior = json.loads(committed)
+    except ValueError:
+        return {}, "HEAD:BENCH_FULL.json is not JSON"
+    for key in ("cpus", "sf"):
+        if prior.get(key) != doc[key]:
+            return {}, f"HEAD:BENCH_FULL.json has {key}={prior.get(key)!r}, this run {doc[key]!r}"
+    return prior.get("queries") or {}, None
 
 
 def _regressions(
     timings: dict[str, float], prior: dict[str, float]
 ) -> dict[str, dict[str, float]]:
-    """Ratchet vs the latest recorded round: flag any headline query that
-    regressed >1.5x round-over-round — the growing headline total would
-    otherwise hide individual regressions. Purely informational in the
-    JSON line; tests/CI read it to warn loudly."""
+    """Flag any headline query that ran >1.5x slower than in the prior
+    record — the headline total would otherwise hide it. Informational."""
     out = {}
     for name, now in timings.items():
         before = prior.get(name)
         if before and now > 1.5 * before:
             out[name] = {"prior": before, "now": now, "ratio": round(now / before, 2)}
     return out
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    spark = get_spark(app_name="bench")
+    specs = registry.load_all()
+    # warm the JVM + parquet footers once with the cheapest query
+    _run(specs[HEADLINE[0]].fn(spark, sf_dir))
+
+    timings: dict[str, float] = {}
+    for name in HEADLINE:
+        # best-of-3: the first run pays one-off costs (codegen compile,
+        # parquet footer cache, broadcast build) that a steady-state
+        # cluster amortizes; the min is the per-query steady-state cost
+        best = float("inf")
+        for _ in range(3):
+            t0 = time.perf_counter()
+            _run(specs[name].fn(spark, sf_dir))
+            best = min(best, time.perf_counter() - t0)
+        timings[name] = round(best, 4)
+        _release(spark)
+
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    sha = _git("rev-parse", "HEAD")
+    doc = {
+        "metric": "headline_query_wall_time",
+        "value": round(sum(timings.values()), 4),
+        "unit": "sec",
+        "queries": timings,
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "r01_comparable_total": round(sum(timings[n] for n in HEADLINE[:5]), 4),
+        "n_queries": len(timings),
+        "cpus": spark.sparkContext.defaultParallelism,
+        "nproc": len(os.sched_getaffinity(0)),
+        "git_sha": sha.strip() if sha else None,
+        "spark_version": spark.version,
+    }
+    prior, doc["prior_skipped"] = _prior(doc, _git("show", "HEAD:BENCH_FULL.json"))
+    doc["regressions"] = _regressions(timings, prior)
+    # The driver captures stdout with a length limit that has clipped
+    # this line before; the complete document is written to a file first.
+    with open(os.path.join(_HERE, "BENCH_FULL.json"), "w") as fh:
+        json.dump(doc, fh, indent=1)
+        fh.write("\n")
+    print(json.dumps(doc))
+    spark.stop()
 
 
 if __name__ == "__main__":

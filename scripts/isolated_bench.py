@@ -1,12 +1,12 @@
-"""Isolated min-of-5 bench: the standard closure-note measurement.
+"""Isolated min-of-5 bench: re-measure single queries on their own.
 
 For each query name given on the command line, spawn a FRESH process
 (fresh JVM, fresh SparkSession, nothing else timed), run the query
-min_of times through the noop sink, and print the raw timing vector
-plus the min. This is the "isolated min-of-5 at sf0.1" measurement the
-regression closure notes in bench.py cite: the first rep pays one-off
-codegen/footer/broadcast costs, the min is the honest steady-state
-per-query cost on this +-50% shared-CPU host.
+``--reps`` times through the noop sink, and print the raw timing vector
+plus the min. Use it to re-check a query that bench.py's
+``regressions`` field flags: the first rep pays one-off
+codegen/footer/broadcast costs, and the min is the steady-state
+per-query cost.
 
 Usage:
     python scripts/isolated_bench.py q1 q2 ...           # min-of-5 each

@@ -9,8 +9,7 @@ window present) at the larger input, then timing one full noop-sink
 execution.  A bucket-offset rewrite that silently fell back to a global
 window would fail the cap here before it fails in production.
 
-Prints one JSON line and records it to SCALE_SWEEP_r{N}.json; bench.py
-embeds the latest recorded sweep summary in its own output.
+Prints one JSON line and records it to SCALE_SWEEP_r{N}.json.
 
 Usage: python scripts/scale_sweep.py [DATA_DIR] [ROUND]
 """

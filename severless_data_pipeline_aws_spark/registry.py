@@ -86,13 +86,12 @@ def load_all() -> dict[str, QuerySpec]:
     dropping its queries would shrink the advertised surface without a
     trace.
 
-    Ordering: the returned dict is INTERLEAVED round-robin across the
-    source modules (flagship first). The driver's correctness gate
-    samples the first N registry entries; plain registration order put
-    the entire sample inside the relational head, so the driver's hard
-    signal never reached the dedup/similarity/text/stats/windows/
-    graphs/multimodal tiers (round-4 verdict #1). Round-robin makes any
-    prefix of the registry span every operator family.
+    Ordering: the returned dict is interleaved round-robin across the
+    source modules, flagship first (see ``_interleaved``). The driver's
+    correctness gate samples the first N registry entries; plain
+    registration order would put that whole sample inside the relational
+    head, while round-robin makes any prefix span every operator family.
+    The order is fixed: it reads no file besides the query modules.
     """
     for mod in _QUERY_MODULES:
         if importlib.util.find_spec(mod) is None:
@@ -105,132 +104,28 @@ def load_all() -> dict[str, QuerySpec]:
 #: kept first so the driver's smoke check always exercises it
 _FLAGSHIP = "flagship_revenue_by_status_year"
 
-#: per-round advance of each module's fresh sub-list. The r9 global
-#: fresh-first wheel takes ~50/16 ≈ 3-4 entries per fresh module per
-#: round, so the stride must be >= that take for consecutive rounds to
-#: sample disjoint fresh prefixes (pools smaller than 2x stride are
-#: exempted by the rotation test as too small to rotate out of).
-_ROTATION_STRIDE = 4
-
-
-def _round_number(root: str | None = None) -> int:
-    """Current build round, inferred from the committed driver ledgers.
-
-    The driver writes ``CORRECTNESS_r{N}.json`` at the END of round N,
-    so during round N the newest ledger on disk is N-1.  Deterministic
-    within a round (the files are committed); overridable for tests via
-    ``SPARK_GRAFT_ROTATION``.  A deployment with NO ledgers alongside
-    the package (fresh source-only clone, installed wheel) silently
-    resetting to round 1 would sample a prefix that no longer matches
-    the committed verification evidence — warn loudly (ADVICE r6)."""
-    import os
-    import re as _re
-
-    env = os.environ.get("SPARK_GRAFT_ROTATION")
-    if env is not None:
-        return int(env)
-    if root is None:
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    rounds = [0]
-    try:
-        for f in os.listdir(root):
-            m = _re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f)
-            if m:
-                rounds.append(int(m.group(1)))
-    except OSError:
-        pass
-    if len(rounds) == 1:
-        warnings.warn(
-            "no CORRECTNESS_r*.json ledgers found next to the package — "
-            "registry rotation defaults to round 1, which matches the "
-            "committed verification evidence only in a full repo checkout "
-            "(set SPARK_GRAFT_ROTATION to pin the round explicitly)",
-            stacklevel=2,
-        )
-    return max(rounds) + 1
-
-
-def _ever_sampled() -> frozenset[str]:
-    """Query names that ever appeared in a committed driver ledger.
-
-    The driver's correctness gate records every sampled query as a key
-    of ``CORRECTNESS_r{N}.json``; the union across rounds is the set of
-    queries that already carry driver evidence.  Deterministic within a
-    round (this round's ledger lands only after the round ends)."""
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    out: set[str] = set()
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        try:
-            with open(path) as fh:
-                doc = json.load(fh)
-            if isinstance(doc, dict):
-                out.update(doc)
-        except (OSError, ValueError):
-            continue
-    return frozenset(out)
-
-
-def _rotated(lst: list, rot: int) -> list:
-    if not lst:
-        return []
-    k = rot % len(lst)
-    return lst[k:] + lst[:k]
-
 
 def _interleaved(reg: dict[str, QuerySpec]) -> dict[str, QuerySpec]:
-    """Round-robin the registry across source modules, flagship first,
-    with ALL never-driver-sampled queries ahead of every ever-sampled
-    one (a global fresh-first wheel), and a per-round rotation inside
-    each module's sub-lists.
+    """Round-robin the registry across source modules, flagship first.
 
-    r6 verdict #3 introduced fresh-first ordering per module bucket,
-    but the per-depth module cycle still backfilled the driver's
-    first-50 prefix with re-samples from modules whose fresh pool was
-    exhausted (r8 verdict #3: 12-name overlap while 336 queries had
-    never been driver-checked).  The wheel now runs in two phases:
-    phase one round-robins the NEVER-SAMPLED sub-lists of every module
-    (absent from every committed CORRECTNESS_r*.json ledger) until all
-    are drained — so the prefix is all fresh evidence while fresh
-    names exist anywhere — and phase two round-robins the ever-sampled
-    remainder.  Modules whose queries are all driver-green simply stop
-    occupying prefix slots: their cumulative evidence is already
-    complete, and re-sampling them starves the 300+ unchecked names.
-    Within each sub-list, round N rotates the start by ``N * stride``
-    so re-runs of the same round stay deterministic and consecutive
-    rounds stay disjoint even before the new ledger lands.  Modules
-    cycle in ``_QUERY_MODULES`` order.  Deterministic: depends only on
-    module list, registration order, and the committed CORRECTNESS
-    ledgers — never on hashing or time.
+    Modules cycle in ``_QUERY_MODULES`` order and each module's queries
+    keep their registration order, so any prefix of at least
+    ``len(_QUERY_MODULES)`` entries spans every module. The order depends
+    only on the module list and registration order — never on files
+    beside the package, the environment, hashing or time.
     """
-    rot = _round_number() * _ROTATION_STRIDE
-    sampled = _ever_sampled()
     mod_rank = {m: i for i, m in enumerate(_QUERY_MODULES)}
     buckets: dict[str, list[QuerySpec]] = {}
     for spec in reg.values():
         buckets.setdefault(spec.fn.__module__, []).append(spec)
-    ordered_mods = sorted(buckets, key=lambda m: mod_rank.get(m, len(mod_rank)))
-    fresh_b: dict[str, list[QuerySpec]] = {}
-    seen_b: dict[str, list[QuerySpec]] = {}
-    for mod, bucket in buckets.items():
-        fresh_b[mod] = _rotated([s for s in bucket if s.name not in sampled], rot)
-        seen_b[mod] = _rotated([s for s in bucket if s.name in sampled], rot)
+    ordered = [buckets[m] for m in sorted(buckets, key=lambda m: mod_rank.get(m, len(mod_rank)))]
     out: dict[str, QuerySpec] = {}
     if _FLAGSHIP in reg:
         out[_FLAGSHIP] = reg[_FLAGSHIP]
-    for phase in (fresh_b, seen_b):
-        depth = max((len(b) for b in phase.values()), default=0)
-        for i in range(depth):
-            for mod in ordered_mods:
-                bucket = phase[mod]
-                if i < len(bucket):
-                    spec = bucket[i]
-                    if spec.name not in out:
-                        out[spec.name] = spec
-    assert len(out) == len(reg)
+    for i in range(max(map(len, ordered), default=0)):
+        for bucket in ordered:
+            if i < len(bucket):
+                out.setdefault(bucket[i].name, bucket[i])
     return out
 
 

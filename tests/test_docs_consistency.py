@@ -423,111 +423,102 @@ def test_survey_220_pinned_to_registry():
 def test_driver_sample_prefix_spans_every_module():
     """The driver's correctness gate checks the FIRST 50 registry
     entries; registry.load_all() interleaves round-robin across source
-    modules so that prefix spans every operator family (r4 verdict #1 —
-    plain registration order starved windows/stats/dedup/similarity/
-    text/graphs/multimodal of driver-green rows). Pin it — for every
-    rotation, not just the current round's."""
-    sampled = registry._ever_sampled()
-    for rot in (0, 1, 6, 7, 23):
-        os.environ["SPARK_GRAFT_ROTATION"] = str(rot)
-        try:
-            specs = registry.load_all()
-        finally:
-            del os.environ["SPARK_GRAFT_ROTATION"]
-        names = list(specs)
-        assert names[0] == "flagship_revenue_by_status_year"
-        # r9: the prefix must span every module that still has
-        # never-sampled queries (the families where new driver evidence
-        # is possible); fully driver-green modules no longer occupy
-        # prefix slots — their cumulative evidence is complete, and
-        # re-sampling them starved the unchecked names (r8 verdict #3)
-        fresh_mods = {
-            s.fn.__module__ for s in specs.values() if s.name not in sampled
+    modules in one fixed order, so that prefix spans every operator
+    family (plain registration order starved windows/stats/dedup/
+    similarity/text/graphs/multimodal of driver-checked rows)."""
+    specs = registry.load_all()
+    names = list(specs)
+    assert names[0] == "flagship_revenue_by_status_year"
+    all_mods = {s.fn.__module__ for s in specs.values()}
+    prefix = names[: len(registry._QUERY_MODULES)]
+    assert {specs[n].fn.__module__ for n in prefix} == all_mods
+
+
+def test_registry_order_ignores_files_beside_the_package(tmp_path):
+    """load_all() gives the same order from a bare copy of the package,
+    with no round ledgers (CORRECTNESS_r*.json) next to it, as in this
+    checkout."""
+    import json
+    import shutil
+    import subprocess
+    import sys
+
+    pkg = os.path.dirname(registry.__file__)
+    shutil.copytree(pkg, tmp_path / os.path.basename(pkg),
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    code = (
+        "import json; from severless_data_pipeline_aws_spark import registry; "
+        "print(json.dumps(list(registry.load_all())))"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYTHONPATH"] = str(tmp_path)
+    run = subprocess.run([sys.executable, "-c", code], cwd=tmp_path, env=env,
+                         capture_output=True, text=True, timeout=300)
+    assert run.returncode == 0, run.stderr[-2000:]
+    assert json.loads(run.stdout.splitlines()[-1]) == list(registry.load_all())
+
+
+def test_bench_headline_is_fixed_and_registered():
+    """bench.py times one fixed set: 130 distinct registered names."""
+    import bench
+
+    assert len(bench.HEADLINE) == len(set(bench.HEADLINE)) == 130
+    missing = set(bench.HEADLINE) - set(registry.load_all())
+    assert not missing, f"unregistered headline queries: {sorted(missing)}"
+
+
+def test_bench_prior_needs_matching_cpus_and_sf():
+    """Regressions are computed only against a committed record taken
+    with the same cores and scale factor; otherwise the bench says why."""
+    import json
+
+    import bench
+
+    doc = {"cpus": 8, "sf": 0.1}
+    rec = {"cpus": 8, "sf": 0.1, "queries": {"q": 1.0}}
+    assert bench._prior(doc, json.dumps(rec)) == ({"q": 1.0}, None)
+    for other in ({**rec, "cpus": 32}, {**rec, "sf": 0.01}, {"queries": {"q": 1.0}}):
+        prior, reason = bench._prior(doc, json.dumps(other))
+        assert prior == {} and reason
+    prior, reason = bench._prior(doc, None)
+    assert prior == {} and reason
+
+
+#: file names of committed round records (driver ledgers, bench and
+#: scale-sweep snapshots); no code may read them
+_ROUND_ARTIFACTS = ("CORRECTNESS_r", "BENCH_r", "BENCH_FULL_r", "SCALE_SWEEP_r")
+
+
+def test_no_code_reads_round_ledgers():
+    """The package, bench.py and scripts/ must not read committed round
+    records: query order and the bench set are fixed in code. The one
+    allowed mention is scale_sweep.py naming its own output file."""
+    import ast
+    import glob
+    from collections import Counter
+
+    root = os.path.dirname(_COVERAGE)
+    paths = [os.path.join(root, "bench.py")]
+    for sub in ("severless_data_pipeline_aws_spark", "scripts"):
+        paths += glob.glob(os.path.join(root, sub, "**", "*.py"), recursive=True)
+    hits: Counter = Counter()
+    for path in paths:
+        tree = ast.parse(open(path).read())
+        docstrings = {
+            id(node.body[0].value)
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+            and node.body
+            and isinstance(node.body[0], ast.Expr)
         }
-        first50_mods = {specs[n].fn.__module__ for n in names[:50]}
-        assert fresh_mods <= first50_mods, (
-            f"rot={rot}: driver sample misses fresh modules: "
-            f"{sorted(fresh_mods - first50_mods)}"
-        )
-
-
-def test_driver_sample_rotates_each_round():
-    """r5 verdict #4: the static interleave re-sampled the SAME 50
-    queries forever, leaving 373 queries with no driver-green row.
-    Consecutive rounds must sample (nearly) disjoint prefixes — overlap
-    is allowed only for the flagship and for modules whose NEVER-
-    SAMPLED pool is too small to rotate out of (r6 verdict #3: the
-    rotation now leads with never-sampled queries, so the rotating
-    sub-list is the fresh pool, not the whole bucket)."""
-    from severless_data_pipeline_aws_spark.registry import _ROTATION_STRIDE
-
-    def first50(rot: int) -> list[str]:
-        os.environ["SPARK_GRAFT_ROTATION"] = str(rot)
-        try:
-            return list(registry.load_all())[:50]
-        finally:
-            del os.environ["SPARK_GRAFT_ROTATION"]
-
-    specs = registry.load_all()
-    sampled = registry._ever_sampled()
-    fresh_sizes: dict[str, int] = {}
-    for s in specs.values():
-        fresh_sizes.setdefault(s.fn.__module__, 0)
-        if s.name not in sampled:
-            fresh_sizes[s.fn.__module__] += 1
-    small_mods = {m for m, n in fresh_sizes.items() if n < 2 * _ROTATION_STRIDE}
-
-    a, b = set(first50(6)), set(first50(7))
-    overlap = a & b
-    unexpected = {
-        n
-        for n in overlap
-        if n != "flagship_revenue_by_status_year"
-        and specs[n].fn.__module__ not in small_mods
-    }
-    assert not unexpected, f"consecutive-round sample overlap: {sorted(unexpected)}"
-
-    # the current (env-less) rotation must differ from the previous round's
-    cur_round = registry._round_number()
-    assert set(first50(cur_round)) == set(list(registry.load_all())[:50])
-
-
-def test_driver_sample_prefers_never_sampled():
-    """r6 verdict #3: 320 of 461 queries had never been driver-checked
-    while rotation kept re-sampling old names.  Pin the fix — an ever-
-    sampled name may appear in the driver's first-50 prefix only when
-    its module's never-sampled pool is exhausted at that depth (the
-    flagship is always first by contract)."""
-    specs = registry.load_all()
-    sampled = registry._ever_sampled()
-    assert sampled, "committed CORRECTNESS ledgers must be readable"
-    fresh_count: dict[str, int] = {}
-    for s in specs.values():
-        fresh_count.setdefault(s.fn.__module__, 0)
-        if s.name not in sampled:
-            fresh_count[s.fn.__module__] += 1
-    taken: dict[str, int] = {}
-    bad = []
-    for n in list(specs)[:50]:
-        if n == "flagship_revenue_by_status_year":
-            continue
-        m = specs[n].fn.__module__
-        taken[m] = taken.get(m, 0) + 1
-        if n in sampled and taken[m] <= fresh_count[m]:
-            bad.append(n)
-    assert not bad, f"ever-sampled names shadow fresh ones in the prefix: {bad}"
-
-
-def test_round_number_warns_without_ledgers(tmp_path, monkeypatch):
-    """ADVICE r6: a deployment without the committed CORRECTNESS
-    ledgers must not silently reset the rotation to round 1."""
-    import warnings as _w
-
-    monkeypatch.delenv("SPARK_GRAFT_ROTATION", raising=False)
-    with _w.catch_warnings(record=True) as caught:
-        _w.simplefilter("always")
-        assert registry._round_number(root=str(tmp_path)) == 1
-    assert any("no CORRECTNESS" in str(c.message) for c in caught)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str) \
+                    and id(node) not in docstrings:
+                for token in _ROUND_ARTIFACTS:
+                    if token in node.value:
+                        hits[(os.path.relpath(path, root), token)] += 1
+    allowed = Counter({(os.path.join("scripts", "scale_sweep.py"), "SCALE_SWEEP_r"): 1})
+    assert hits == allowed, f"code names round records: {dict(hits - allowed)}"
 
 
 def test_query_counts_pinned_to_registry():
@@ -562,41 +553,6 @@ def test_readme_headline_pinned_to_registry():
     assert got == (n_oracled, n_total), (
         f"README says {got}, registry has ({n_oracled}, {n_total})"
     )
-
-
-def test_bench_ratchet_prior_covers_full_previous_round():
-    """r7 verdict wrong#1: the regression ratchet read prior timings
-    from the TRUNCATED driver stdout captures (BENCH_r*.json tails), so
-    ~2/3 of the headline set was invisible to it and two >1.5x movers
-    shipped with regressions={}. Pin the fix: _prior_timings must
-    return the complete per-query record of the newest prior round's
-    committed BENCH_FULL_r{N}.json snapshot — every query, not a tail
-    fragment."""
-    import glob
-    import json
-
-    import bench
-
-    root = os.path.dirname(_COVERAGE)
-    current = registry._round_number(root)
-    snaps = {}
-    for path in glob.glob(os.path.join(root, "BENCH_FULL_r*.json")):
-        m = re.fullmatch(r"BENCH_FULL_r(\d+)\.json", os.path.basename(path))
-        if m:
-            snaps[int(m.group(1))] = path
-    prior_rounds = [n for n in snaps if n < current]
-    assert prior_rounds, (
-        "no committed BENCH_FULL_r{N}.json snapshot for a prior round — "
-        "the ratchet would fall back to truncated driver captures"
-    )
-    with open(snaps[max(prior_rounds)]) as fh:
-        doc = json.load(fh)
-    prior = bench._prior_timings()
-    assert set(prior) == set(doc["queries"]), (
-        "ratchet prior does not match the previous round's complete "
-        "per-query record"
-    )
-    assert len(prior) >= doc["n_queries"]
 
 
 def test_survey_s2_operator_ids_unique():
@@ -635,54 +591,6 @@ def test_survey_s2_operator_ids_unique():
     )
     dups = {k: v for k, v in Counter(ids).items() if v > 1}
     assert not dups, f"duplicate SURVEY §2 operator IDs: {dups}"
-
-
-def test_committed_bench_snapshots_are_clean_windows():
-    """r10 verdict wrong#1: a degraded-window capture (median per-query
-    ratio 1.335 vs the clean record, 15 unnoted movers) was committed
-    over the clean r10 snapshot, poisoning the r11 ratchet prior. Pin
-    the machine-enforced discipline: every committed consecutive-round
-    snapshot pair must have a median per-query ratio within the clean
-    band, and no snapshot may self-mark degraded_window — bench.py now
-    refuses to write one (the stdout line still happens; only the
-    artifact of record is protected)."""
-    import glob
-    import json
-    import statistics
-
-    import bench
-
-    root = os.path.dirname(_COVERAGE)
-    snaps = {}
-    for path in glob.glob(os.path.join(root, "BENCH_FULL_r*.json")):
-        m = re.fullmatch(r"BENCH_FULL_r(\d+)\.json", os.path.basename(path))
-        if m:
-            with open(path) as fh:
-                snaps[int(m.group(1))] = json.load(fh)
-    assert snaps
-    for n, doc in snaps.items():
-        assert not doc.get("degraded_window"), (
-            f"BENCH_FULL_r{n:02d}.json is a self-marked degraded-window "
-            "capture committed as the round record"
-        )
-        # pre-guard rounds (<= 10) carry no marker; the pairwise median
-        # check below covers them
-        prev = snaps.get(n - 1)
-        if prev is None:
-            continue
-        ratios = [
-            now / prev["queries"][q]
-            for q, now in doc["queries"].items()
-            if prev["queries"].get(q)
-        ]
-        if len(ratios) < 20:
-            continue
-        med = statistics.median(ratios)
-        assert med <= bench._CLEAN_WINDOW_MEDIAN_MAX, (
-            f"BENCH_FULL_r{n:02d}.json reads median {med:.3f}x its prior "
-            "round — a degraded-window capture committed as the record "
-            "(r10 verdict wrong#1 recurrence)"
-        )
 
 
 _R11_QUERIES = frozenset(
