@@ -236,23 +236,13 @@ def _run(df) -> None:
 
 
 def _release(spark) -> None:
-    """Drop what the last query left in the session, so later queries are
-    not timed under another query's memory pressure and none can read a
-    view another query created."""
+    """Drop what the last query cached or checkpointed, so later queries
+    are not timed under another query's memory pressure."""
     spark.catalog.clearCache()
     # clearCache only empties the CacheManager; localCheckpoint blocks
     # stay in the block manager for the session
     for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
         rdd.unpersist()
-    # the unpersist above strands any temp view over the dropped blocks
-    # (localCheckpoint truncates lineage). Listing the global_temp
-    # database returns global and session-local temp views alike.
-    global_temp = spark.conf.get("spark.sql.globalTempDatabase")
-    for view in spark.catalog.listTables(global_temp):
-        if view.namespace == [global_temp]:
-            spark.catalog.dropGlobalTempView(view.name)
-        elif view.isTemporary:
-            spark.catalog.dropTempView(view.name)
 
 
 def _git(*args: str) -> str | None:

@@ -271,15 +271,12 @@ class _WordChunks:
 def udf_python_udtf_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import udtf
 
-    from ..io import register_views
-
-    register_views(spark, sf_dir)
     chunker = udtf(_WordChunks, returnType="doc_id bigint, chunk_idx int, chunk string")
     spark.udtf.register("word_chunks", chunker)
-    return spark.sql(
+    return Tables(spark, sf_dir).sql(
         """
         SELECT c.doc_id, c.chunk_idx, c.chunk
-        FROM documents d, LATERAL word_chunks(d.doc_id, d.text) c
+        FROM {documents} d, LATERAL word_chunks(d.doc_id, d.text) c
         WHERE d.doc_id < 20
         """
     )

@@ -9,6 +9,7 @@ read by Spark with predicate pushdown and column pruning — the scan cap
 from __future__ import annotations
 
 import os
+import string
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -119,11 +120,13 @@ class Tables:
             return load_table(self.spark, self.sf_dir, name)
         raise AttributeError(name)
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view (for the SQL API)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+    def sql(self, text: str, **kwargs) -> DataFrame:
+        """``spark.sql(text, **kwargs)`` with every ``{table}`` placeholder
+        bound to that table as a DataFrame argument: PySpark names the view
+        uniquely and drops it once the query is analyzed, so the session
+        catalog is left as it was."""
+        names = {f for _, f, _, _ in string.Formatter().parse(text) if f in TABLES}
+        return self.spark.sql(text, **{n: getattr(self, n) for n in names}, **kwargs)
 
 
 def read_csv_tolerant(

@@ -69,6 +69,21 @@ def spread(df: DataFrame) -> DataFrame:
     return df
 
 
+def bucket_pairs(arr: str, struct_body: str) -> Column:
+    """Explode every i<j pair of the array column ``arr`` as one
+    ``struct(struct_body)`` row, with ``x`` bound to element i and ``y``
+    to element j — the pair generator that replaces a bucket self-join
+    (each element is read once, and the pair set is the join's i<j half
+    when ``arr`` is sorted and duplicate-free)."""
+    return F.explode(
+        F.expr(
+            f"flatten(transform({arr}, (x, i) ->"
+            f" transform(slice({arr}, i + 2, size({arr}) - i - 1),"
+            f" y -> struct({struct_body}))))"
+        )
+    )
+
+
 def dsum(expr_sql: str) -> Column:
     """Order-independent exact sum of a double expression (Spark side)."""
     return F.sum(F.expr(f"CAST(({expr_sql}) AS {DEC})"))

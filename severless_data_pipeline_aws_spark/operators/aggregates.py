@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import Tables, register_views
+from ..io import Tables
 from ..registry import register
 from ._helpers import davg, dsum_double
 
@@ -140,16 +140,12 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "grouping_sets"),
 )
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = Tables(spark, sf_dir)
-    t.orders.createOrReplaceTempView("_gs_orders")
-    t.customer.createOrReplaceTempView("_gs_customer")
-    t.nation.createOrReplaceTempView("_gs_nation")
-    return spark.sql(
+    return Tables(spark, sf_dir).sql(
         """
         SELECT n_name, o_orderstatus, COUNT(*) AS n
-        FROM _gs_orders
-        JOIN _gs_customer ON o_custkey = c_custkey
-        JOIN _gs_nation ON c_nationkey = n_nationkey
+        FROM {orders}
+        JOIN {customer} ON o_custkey = c_custkey
+        JOIN {nation} ON c_nationkey = n_nationkey
         GROUP BY GROUPING SETS ((n_name), (o_orderstatus), (n_name, o_orderstatus))
         """
     )
@@ -422,8 +418,7 @@ def agg_collect_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "timeseries", "rollup"),
 )
 def timeseries_rollup_hierarchical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return Tables(spark, sf_dir).sql(
         """
         SELECT CASE WHEN GROUPING(hour_b) = 1 THEN 'day' ELSE 'hour' END AS level,
                CASE WHEN GROUPING(hour_b) = 1 THEN day_b ELSE hour_b END AS bucket_start,
@@ -435,7 +430,7 @@ def timeseries_rollup_hierarchical(spark: SparkSession, sf_dir: str) -> DataFram
         FROM (SELECT date_trunc('hour', ts) AS hour_b,
                      date_trunc('day', ts) AS day_b,
                      event_type, value
-              FROM events)
+              FROM {events})
         GROUP BY event_type, day_b, GROUPING SETS ((hour_b), ())
         ORDER BY level, bucket_start, event_type
         """

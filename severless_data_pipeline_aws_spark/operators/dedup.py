@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..io import Tables
 from ..registry import register
-from ._helpers import materialize, spread
+from ._helpers import bucket_pairs, materialize, spread
 
 #: documents subset used by the quadratic-adjacent verification queries —
 #: candidate joins stay bounded while still covering many near-dup pairs.
@@ -434,15 +434,7 @@ def minhash_lsh_candidates(docs: DataFrame) -> DataFrame:
         .filter(F.size("ds") >= 2)
     )
     return (
-        grp.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (x, i) ->"
-                    " transform(slice(ds, i + 2, size(ds) - i - 1),"
-                    " y -> struct(x AS doc_a, y AS doc_b))))"
-                )
-            ).alias("p")
-        )
+        grp.select(bucket_pairs("ds", "x AS doc_a, y AS doc_b").alias("p"))
         .select("p.doc_a", "p.doc_b")
         .distinct()
     )
@@ -694,13 +686,10 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         grp.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (x, i) ->"
-                    " transform(slice(ds, i + 2, size(ds) - i - 1),"
-                    " y -> struct(x.doc_id AS doc_a, y.doc_id AS doc_b,"
-                    " x.simhash AS sh_a, y.simhash AS sh_b))))"
-                )
+            bucket_pairs(
+                "ds",
+                "x.doc_id AS doc_a, y.doc_id AS doc_b,"
+                " x.simhash AS sh_a, y.simhash AS sh_b",
             ).alias("p")
         )
         .select(

@@ -31,6 +31,7 @@ from pyspark.sql.window import Window as W
 
 from ..io import Tables
 from ..registry import register
+from ._helpers import bucket_pairs
 from .sampling import _H_DUCK, _H_SPARK
 
 _PASS_LANG = "lang = 'en'"
@@ -804,13 +805,8 @@ def funnel_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
     )
     n_baskets = baskets.agg(F.count(F.lit(1)).alias("n_baskets"))
-    pair_structs = F.expr(
-        "flatten(transform(items, (x, i) -> "
-        "transform(slice(items, i + 2, size(items)), "
-        "y -> struct(x AS item_a, y AS item_b))))"
-    )
     pairs = (
-        baskets.select(F.explode(pair_structs).alias("p"))
+        baskets.select(bucket_pairs("items", "x AS item_a, y AS item_b").alias("p"))
         .select(F.col("p.item_a").alias("item_a"), F.col("p.item_b").alias("item_b"))
         .groupBy("item_a", "item_b")
         .agg(F.count(F.lit(1)).alias("pair_n"))

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..io import Tables
 from ..registry import register
+from ._helpers import bucket_pairs
 
 MEDIA_SCHEMA = (
     "doc_id bigint, media_type string, width int, height int, payload binary"
@@ -728,14 +729,10 @@ def multimodal_ahash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = (
         grp.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (x, i) ->"
-                    " transform(slice(ds, i + 2, size(ds) - i - 1),"
-                    " y -> struct(x.doc_id AS doc_a, y.doc_id AS doc_b,"
-                    " x.lo AS lo_a, x.hi AS hi_a,"
-                    " y.lo AS lo_b, y.hi AS hi_b))))"
-                )
+            bucket_pairs(
+                "ds",
+                "x.doc_id AS doc_a, y.doc_id AS doc_b,"
+                " x.lo AS lo_a, x.hi AS hi_a, y.lo AS lo_b, y.hi AS hi_b",
             ).alias("p")
         )
         .select("p.doc_a", "p.doc_b", "p.lo_a", "p.hi_a", "p.lo_b", "p.hi_b")

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import Tables, register_views
+from ..io import Tables
 from ..registry import register
 from ._helpers import dsum_double
 
@@ -193,10 +193,12 @@ def distinct_sorted_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc=(
         "The SQL front door: this query is executed as a literal "
-        "spark.sql() string over temp views (io.register_views), not "
-        "through the DataFrame builders — proving the engine's second "
-        "API surface end-to-end (view registration, ANSI join syntax, "
-        "decimal-exact aggregation) lands on the identical Catalyst "
+        "spark.sql() string whose {table} placeholders are bound to "
+        "the tables as DataFrame arguments (io.Tables.sql; PySpark "
+        "drops its per-query views after analysis, so the session "
+        "catalog is untouched), not through the DataFrame builders — "
+        "proving the engine's second API surface end-to-end (ANSI "
+        "join syntax, decimal-exact aggregation) lands on the identical Catalyst "
         "plan and the identical hash as the DataFrame path would. "
         "Broadcast of nation happens via AQE size estimation here "
         "rather than an explicit hint — the declarative path."
@@ -204,17 +206,16 @@ def distinct_sorted_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "sql-api", "join", "agg"),
 )
 def sql_api_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return Tables(spark, sf_dir).sql(
         """
         SELECT n_name,
                CAST(COUNT(DISTINCT c_custkey) AS BIGINT) AS n_customers,
                CAST(SUM(CAST((l_extendedprice * (1 - l_discount))
                     AS DECIMAL(38,8))) AS DOUBLE) AS revenue
-        FROM customer
-        JOIN nation ON c_nationkey = n_nationkey
-        JOIN orders ON o_custkey = c_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
+        FROM {customer}
+        JOIN {nation} ON c_nationkey = n_nationkey
+        JOIN {orders} ON o_custkey = c_custkey
+        JOIN {lineitem} ON l_orderkey = o_orderkey
         GROUP BY n_name
         ORDER BY n_name
         """
@@ -364,14 +365,14 @@ def relational_pareto_skyline_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
         "form of conditional aggregation, planned identically to the "
         "CASE-WHEN rewrite but without nesting the predicate inside "
         "the aggregate's argument). Executed as a literal spark.sql() "
-        "string over registered views; the filtered decimal sum keeps "
-        "the usual exactness discipline. One scan, one combine."
+        "string over tables bound as DataFrame arguments; the filtered "
+        "decimal sum keeps the usual exactness discipline. One scan, "
+        "one combine."
     ),
     tags=("relational", "sql-api", "agg"),
 )
 def sql_api_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return Tables(spark, sf_dir).sql(
         """
         SELECT o_orderstatus,
                COUNT(*) AS n_orders,
@@ -379,7 +380,7 @@ def sql_api_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(SUM(CAST(o_totalprice AS DECIMAL(38,8)))
                     FILTER (WHERE o_orderpriority = '1-URGENT') AS DOUBLE)
                  AS urgent_revenue
-        FROM orders
+        FROM {orders}
         GROUP BY o_orderstatus
         """
     )
@@ -389,18 +390,19 @@ def sql_api_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: key (parent(k) = floor((k-1)/2), root 0) — a synthetic org chart over
 #: a real dimension table. FLOOR before the INT cast: DuckDB CAST rounds
 #: while Spark truncates (the repo's documented cross-engine trap).
+#: ``{nation}`` is the table's name for DuckDB, a bound DataFrame for Spark.
 _RECURSIVE_WALK_SQL = """
     WITH RECURSIVE walk AS (
         SELECT n_nationkey AS node, n_nationkey AS cur,
                0 AS depth, n_name AS path
-        FROM nation
+        FROM {nation}
         UNION ALL
         SELECT w.node,
                CAST(FLOOR((w.cur - 1) / 2) AS INTEGER) AS cur,
                w.depth + 1,
                w.path || '>' || p.n_name
         FROM walk w
-        JOIN nation p
+        JOIN {nation} p
           ON p.n_nationkey = CAST(FLOOR((w.cur - 1) / 2) AS INTEGER)
         WHERE w.cur > 0
     )
@@ -413,7 +415,7 @@ _RECURSIVE_WALK_SQL = """
 
 @register(
     "sql_api_recursive_cte",
-    oracle=_RECURSIVE_WALK_SQL,
+    oracle=_RECURSIVE_WALK_SQL.format(nation="nation"),
     doc=(
         "Native WITH RECURSIVE through the SQL front door (Spark 4's "
         "recursive CTE support): every nation walks a synthetic binary-"
@@ -430,8 +432,7 @@ _RECURSIVE_WALK_SQL = """
     tags=("relational", "sql-api", "recursive", "spark4"),
 )
 def sql_api_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(_RECURSIVE_WALK_SQL)
+    return Tables(spark, sf_dir).sql(_RECURSIVE_WALK_SQL)
 
 
 @register(
@@ -457,14 +458,13 @@ def sql_api_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "sql-api", "agg", "spark4"),
 )
 def sql_api_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return Tables(spark, sf_dir).sql(
         """
         SELECT o_orderstatus,
                CAST(year(o_orderdate) AS INT) AS o_year,
                o_orderpriority,
                COUNT(*) AS n_orders
-        FROM orders
+        FROM {orders}
         GROUP BY ALL
         ORDER BY ALL
         """
@@ -496,10 +496,9 @@ def sql_api_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql", "api", "spark4"),
 )
 def sql_api_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return Tables(spark, sf_dir).sql(
         """
-        FROM lineitem
+        FROM {lineitem}
         |> WHERE l_shipdate >= TIMESTAMP '1995-01-01'
         |> AGGREGATE CAST(COUNT(*) AS BIGINT) AS n_items,
                      CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
@@ -534,13 +533,12 @@ def sql_api_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql", "api", "spark4"),
 )
 def sql_api_named_parameters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return Tables(spark, sf_dir).sql(
         """
         SELECT o_orderpriority,
                CAST(COUNT(*) AS BIGINT) AS n_orders,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(38,8))) AS DOUBLE) AS total
-        FROM orders
+        FROM {orders}
         WHERE o_totalprice > :min_price
           AND o_orderstatus = :status
         GROUP BY o_orderpriority
@@ -576,15 +574,14 @@ def sql_api_named_parameters(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql", "api", "agg", "spark4"),
 )
 def sql_api_listagg_within_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return Tables(spark, sf_dir).sql(
         """
         SELECT r_name,
                CAST(COUNT(*) AS BIGINT) AS n_nations,
                listagg(n_name, ';') WITHIN GROUP (ORDER BY n_name DESC)
                    AS nations_desc,
                CAST(length(nations_desc) AS BIGINT) AS list_len
-        FROM nation JOIN region ON n_regionkey = r_regionkey
+        FROM {nation} JOIN {region} ON n_regionkey = r_regionkey
         GROUP BY r_name
         ORDER BY r_name
         """
@@ -625,8 +622,7 @@ def sql_api_listagg_within_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("relational", "sql-api", "window", "spark4"),
 )
 def sql_api_named_window_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return Tables(spark, sf_dir).sql(
         """
         SELECT * FROM (
             SELECT o_custkey, o_orderkey,
@@ -634,7 +630,7 @@ def sql_api_named_window_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) OVER w
                         AS BIGINT) AS running_cents,
                    CAST(lag(o_orderkey) OVER w AS BIGINT) AS prev_orderkey
-            FROM orders
+            FROM {orders}
             WINDOW w AS (PARTITION BY o_custkey
                          ORDER BY o_orderdate, o_orderkey)
         )

@@ -449,7 +449,6 @@ def stats_ks_two_sample_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: Welch's t closed form over per-group (n, sum, sum-of-squares) — identical
 #: text evaluated by both engines on identical double inputs.
-_WELCH_FROM = "welch_sums"
 _WELCH = """
     SELECT n1, n2, m1, m2,
            (m1 - m2) / sqrt(v1 / nd1 + v2 / nd2) AS t_stat,
@@ -510,8 +509,7 @@ def stats_welch_t_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CASE WHEN o_orderstatus = 'O' THEN o_totalprice * o_totalprice ELSE 0 END"
         ).alias("q2"),
     )
-    sums.createOrReplaceTempView(_WELCH_FROM)
-    return spark.sql(_WELCH.format(src=_WELCH_FROM))
+    return spark.sql(_WELCH, src=sums)
 
 
 @register(
@@ -1946,9 +1944,6 @@ def _sq_div_scaled_sql(a: str, d: str) -> str:
     return f"(({a_h} * {q1} + {q2}) * {_SC10} + {frac})"
 
 
-_KW_FROM = "kw_exact_sums"
-
-
 @register(
     "stats_kruskal_wallis",
     oracle=f"""
@@ -1978,12 +1973,12 @@ _KW_FROM = "kw_exact_sums"
                    CAST(COUNT(*) AS BIGINT) AS k
             FROM g
         ),
-        {_KW_FROM} AS (
+        kw_exact_sums AS (
             SELECT s4s, n, np1, k,
                    CAST(n AS HUGEINT) * n * n - n AS n3n, tsum
             FROM sums, ties
         )
-        {_kw_final(ddbl_sql).format(src=_KW_FROM)}
+        {_kw_final(ddbl_sql).format(src='kw_exact_sums')}
     """,
     doc=(
         "Kruskal-Wallis H (the k-group nonparametric ANOVA — rank sums "
@@ -2032,8 +2027,7 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s4s", "n", "np1", "k",
         "CAST(n AS DECIMAL(38,0)) * n * n - n AS n3n", "tsum",
     )
-    exact.createOrReplaceTempView(_KW_FROM)
-    return spark.sql(_kw_final(ddbl).format(src=_KW_FROM))
+    return spark.sql(_kw_final(ddbl), src=exact)
 
 
 #: Kendall tau-b closed form — all-integer inputs, so the IDENTICAL
@@ -2047,8 +2041,6 @@ _KENDALL_FINAL = """
            END AS tau_b
     FROM {src}
 """
-
-_KENDALL_FROM = "kendall_pair_sums"
 
 
 @register(
@@ -2078,14 +2070,14 @@ _KENDALL_FROM = "kendall_pair_sums"
             SELECT CAST(COALESCE(SUM(t * (t - 1) // 2), 0) AS BIGINT) AS n2t
             FROM (SELECT CAST(COUNT(*) AS BIGINT) AS t FROM daily GROUP BY y)
         ),
-        {_KENDALL_FROM} AS (
+        kendall_pair_sums AS (
             SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM daily) AS ndays,
                    CAST((SELECT CAST(COUNT(*) AS BIGINT) FROM daily)
                      * ((SELECT COUNT(*) FROM daily) - 1) // 2 AS BIGINT) AS n0,
                    c, d, n1t, n2t
             FROM pairs, tx, ty
         )
-        {_KENDALL_FINAL.format(src=_KENDALL_FROM)}
+        {_KENDALL_FINAL.format(src='kendall_pair_sums')}
     """,
     doc=(
         "Kendall tau-b between daily order volume and daily revenue — "
@@ -2139,8 +2131,7 @@ def stats_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(nd))
         .selectExpr("ndays", "ndays * (ndays - 1) DIV 2 AS n0", "c", "d", "n1t", "n2t")
     )
-    exact.createOrReplaceTempView(_KENDALL_FROM)
-    return spark.sql(_KENDALL_FINAL.format(src=_KENDALL_FROM))
+    return spark.sql(_KENDALL_FINAL, src=exact)
 
 
 def _cramers_final(dbl) -> str:
@@ -2220,9 +2211,6 @@ def _cramers_pair_spark(df: DataFrame, rowk, colk, label: str) -> DataFrame:
     )
 
 
-_CRAMERS_FROM = "cramers_exact_sums"
-
-
 @register(
     "stats_cramers_v",
     oracle=f"""
@@ -2263,8 +2251,7 @@ def stats_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.orders, F.col("o_orderstatus"), F.col("o_orderpriority"), "status_x_priority"
     )
     exact = p1.unionByName(p2)
-    exact.createOrReplaceTempView(_CRAMERS_FROM)
-    return spark.sql(_cramers_final(ddbl).format(src=_CRAMERS_FROM))
+    return spark.sql(_cramers_final(ddbl), src=exact)
 
 
 _ACF_MAX_LAG = 7
@@ -2286,9 +2273,6 @@ def _acf_final(dbl) -> str:
     """
 
 
-_ACF_FROM = "acf_pair_sums"
-
-
 @register(
     "stats_acf_multi_lag",
     oracle=f"""
@@ -2303,7 +2287,7 @@ _ACF_FROM = "acf_pair_sums"
             JOIN daily a ON true
             JOIN daily b ON b.day = a.day + CAST(l.lag AS INTEGER)
         ),
-        {_ACF_FROM} AS (
+        acf_pair_sums AS (
             SELECT CAST(lag AS INTEGER) AS lag,
                    CAST(COUNT(*) AS BIGINT) AS n,
                    SUM(xa) AS sx, SUM(xb) AS sy,
@@ -2312,7 +2296,7 @@ _ACF_FROM = "acf_pair_sums"
                    SUM(CAST(xa AS DECIMAL(19,8)) * xb) AS sxy
             FROM pairs GROUP BY 1
         )
-        {_acf_final(ddbl_sql).format(src=_ACF_FROM)}
+        {_acf_final(ddbl_sql).format(src='acf_pair_sums')}
     """,
     doc=(
         "Autocorrelation function of the daily value series at lags "
@@ -2353,8 +2337,7 @@ def stats_acf_multi_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.expr("CAST(xb AS DECIMAL(19,8)) * xb")).alias("syy"),
         F.sum(F.expr("CAST(xa AS DECIMAL(19,8)) * xb")).alias("sxy"),
     )
-    sums.createOrReplaceTempView(_ACF_FROM)
-    return spark.sql(_acf_final(ddbl).format(src=_ACF_FROM))
+    return spark.sql(_acf_final(ddbl), src=sums)
 
 
 #: standard-normal quantiles for alpha=0.05 (two-sided) and power=0.80,
@@ -2385,9 +2368,6 @@ def _power_final(dbl) -> str:
     """
 
 
-_POWER_FROM = "power_day_sums"
-
-
 @register(
     "stats_power_analysis_proportions",
     oracle=f"""
@@ -2399,7 +2379,7 @@ _POWER_FROM = "power_day_sums"
             FROM events GROUP BY 1
         ),
         horizons AS (SELECT unnest([7, 14, 28]) AS horizon_days),
-        {_POWER_FROM} AS (
+        power_day_sums AS (
             SELECT h.horizon_days,
                    CAST(SUM(d.n) AS BIGINT) AS n_events,
                    CAST(SUM(d.c) AS BIGINT) AS n_conv
@@ -2408,7 +2388,7 @@ _POWER_FROM = "power_day_sums"
               ON d.day > (SELECT MAX(day) FROM daily) - h.horizon_days
             GROUP BY h.horizon_days
         )
-        {_power_final(ddbl_sql).format(src=_POWER_FROM)}
+        {_power_final(ddbl_sql).format(src='power_day_sums')}
     """,
     doc=(
         "A/B test power analysis from observed traffic: for 7/14/28-"
@@ -2447,8 +2427,7 @@ def stats_power_analysis_proportions(spark: SparkSession, sf_dir: str) -> DataFr
             F.sum("c").cast("bigint").alias("n_conv"),
         )
     )
-    sums.createOrReplaceTempView(_POWER_FROM)
-    return spark.sql(_power_final(ddbl).format(src=_POWER_FROM))
+    return spark.sql(_power_final(ddbl), src=sums)
 
 
 def _wilson_final(dbl) -> str:
@@ -2472,9 +2451,6 @@ def _wilson_final(dbl) -> str:
     """
 
 
-_WILSON_FROM = "wilson_segment_counts"
-
-
 @register(
     "stats_wilson_conversion_intervals",
     oracle=f"""
@@ -2485,13 +2461,13 @@ _WILSON_FROM = "wilson_segment_counts"
                        AS converted
             FROM events GROUP BY user_id
         ),
-        {_WILSON_FROM} AS (
+        wilson_segment_counts AS (
             SELECT segment,
                    CAST(COUNT(*) AS BIGINT) AS n,
                    CAST(SUM(converted) AS BIGINT) AS k
             FROM per_user GROUP BY segment
         )
-        {_wilson_final(ddbl_sql).format(src=_WILSON_FROM)}
+        {_wilson_final(ddbl_sql).format(src='wilson_segment_counts')}
     """,
     doc=(
         "Wilson score confidence intervals for per-segment user "
@@ -2522,8 +2498,7 @@ def stats_wilson_conversion_intervals(spark: SparkSession, sf_dir: str) -> DataF
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("converted").cast("bigint").alias("k"),
     )
-    counts.createOrReplaceTempView(_WILSON_FROM)
-    return spark.sql(_wilson_final(ddbl).format(src=_WILSON_FROM))
+    return spark.sql(_wilson_final(ddbl), src=counts)
 
 
 def _cohens_final(dbl) -> str:
@@ -2552,13 +2527,10 @@ def _cohens_final(dbl) -> str:
     """
 
 
-_COHENS_FROM = "cohens_arm_sums"
-
-
 @register(
     "stats_cohens_d_effect_size",
     oracle=f"""
-        WITH {_COHENS_FROM} AS (
+        WITH cohens_arm_sums AS (
             SELECT
                 CAST(COUNT(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS BIGINT) AS n1,
                 CAST(COUNT(CASE WHEN o_orderstatus = 'O' THEN 1 END) AS BIGINT) AS n2,
@@ -2570,7 +2542,7 @@ _COHENS_FROM = "cohens_arm_sums"
                 {dsum_double_sql("CASE WHEN o_orderstatus = 'O' THEN o_totalprice * o_totalprice ELSE 0 END")} AS q2
             FROM orders WHERE o_orderstatus IN ('F', 'O')
         )
-        {_cohens_final(ddbl_sql).format(src=_COHENS_FROM)}
+        {_cohens_final(ddbl_sql).format(src='cohens_arm_sums')}
     """,
     doc=(
         "Standardized effect size between the F and O order-value "
@@ -2602,8 +2574,7 @@ def stats_cohens_d_effect_size(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CASE WHEN o_orderstatus = 'O' THEN o_totalprice * o_totalprice ELSE 0 END"
         ).alias("q2"),
     )
-    sums.createOrReplaceTempView(_COHENS_FROM)
-    return spark.sql(_cohens_final(ddbl).format(src=_COHENS_FROM))
+    return spark.sql(_cohens_final(ddbl), src=sums)
 
 
 @register(
@@ -3418,8 +3389,6 @@ def stats_grubbs_max_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _BH_Q = 0.1  # FDR level (dyadic-close literal; identical text both engines)
 
-_BH_FROM = "bh_type_half_sums"
-
 #: shared closed-form tail: Welch-style z^2 from exact half sums, the
 #: distribution-free Chebyshev p-bound p = min(1, 1/z^2) (an exact
 #: rational in the sums — no erf/Phi, so no transcendental-libm skew),
@@ -3473,7 +3442,7 @@ _BH_TAIL = """
                    value
             FROM events
         ),
-        {_BH_FROM} AS (
+        bh_type_half_sums AS (
             SELECT event_type,
                    CAST(COUNT(CASE WHEN half = 0 THEN 1 END) AS BIGINT) AS n_a,
                    CAST(COUNT(CASE WHEN half = 1 THEN 1 END) AS BIGINT) AS n_b,
@@ -3493,7 +3462,7 @@ _BH_TAIL = """
                         AS VARCHAR) AS DOUBLE) AS q_b
             FROM halves GROUP BY event_type
         ),
-        {_BH_TAIL.format(src=_BH_FROM, q=_BH_Q)}
+        {_BH_TAIL.format(src='bh_type_half_sums', q=_BH_Q)}
     """,
     doc=(
         "ST39: Benjamini-Hochberg FDR control (q=0.1) over the family "
@@ -3539,8 +3508,7 @@ def stats_benjamini_hochberg_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
             " AS DOUBLE)"
         ).alias("q_b"),
     )
-    sums.createOrReplaceTempView(_BH_FROM)
-    return spark.sql("WITH " + _BH_TAIL.format(src=_BH_FROM, q=_BH_Q))
+    return spark.sql("WITH " + _BH_TAIL, src=sums, q=_BH_Q)
 
 
 # ---------------------------------------------------------------------------
@@ -5867,10 +5835,9 @@ def stats_granger_causality_1lag(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(SUM(x * y) AS BIGINT)").alias("sxy"),
         F.expr("CAST(SUM(a * x) AS BIGINT)").alias("sax"),
     )
-    sums.createOrReplaceTempView("__granger_sums")
     return spark.sql(
-        f"WITH m AS (SELECT n, {_GRANGER_MOMENTS} FROM __granger_sums)"
-        f" {_GRANGER_FINAL}"
+        f"WITH m AS (SELECT n, {_GRANGER_MOMENTS} FROM {{src}}) {_GRANGER_FINAL}",
+        src=sums,
     )
 
 
@@ -8563,7 +8530,7 @@ def stats_getis_ord_gi_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Hurst rescaled-range table.
 # ---------------------------------------------------------------------------
 
-_HOLM_ALPHA = "0.1"  # FWER level; identical literal text on both engines
+_HOLM_ALPHA = 0.1  # FWER level; identical literal text on both engines
 
 _HOLM_TAIL = """
     stats AS (
@@ -8604,8 +8571,6 @@ _HOLM_TAIL = """
     ORDER BY p_rank
 """
 
-_HOLM_FROM = "holm_type_half_sums"
-
 
 @register(
     "stats_holm_bonferroni_adjust",
@@ -8616,7 +8581,7 @@ _HOLM_FROM = "holm_type_half_sums"
                    value
             FROM events
         ),
-        {_HOLM_FROM} AS (
+        holm_type_half_sums AS (
             SELECT event_type,
                    CAST(COUNT(CASE WHEN half = 0 THEN 1 END) AS BIGINT) AS n_a,
                    CAST(COUNT(CASE WHEN half = 1 THEN 1 END) AS BIGINT) AS n_b,
@@ -8636,7 +8601,7 @@ _HOLM_FROM = "holm_type_half_sums"
                         AS VARCHAR) AS DOUBLE) AS q_b
             FROM halves GROUP BY event_type
         ),
-        {_HOLM_TAIL.format(src=_HOLM_FROM, alpha=_HOLM_ALPHA)}
+        {_HOLM_TAIL.format(src='holm_type_half_sums', alpha=_HOLM_ALPHA)}
     """,
     doc=(
         "ST94: Holm-Bonferroni step-down adjustment over the same "
@@ -8683,10 +8648,7 @@ def stats_holm_bonferroni_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
             " AS DOUBLE)"
         ).alias("q_b"),
     )
-    sums.createOrReplaceTempView(_HOLM_FROM)
-    return spark.sql(
-        "WITH " + _HOLM_TAIL.format(src=_HOLM_FROM, alpha=_HOLM_ALPHA)
-    )
+    return spark.sql("WITH " + _HOLM_TAIL, src=sums, alpha=_HOLM_ALPHA)
 
 
 @register(
@@ -9219,8 +9181,6 @@ def _bd_tail() -> str:
     """
 
 
-_BD_FROM = "bd_priority_cells"
-
 _BD_CELLS_SQL = """
             SELECT o_orderpriority,
                    CAST(SUM(CASE WHEN o_custkey % 2 = 0
@@ -9287,8 +9247,7 @@ def stats_breslow_day_homogeneity(spark: SparkSession, sf_dir: str) -> DataFrame
         ).alias("d"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
     )
-    cells.createOrReplaceTempView(_BD_FROM)
-    return spark.sql("WITH " + _bd_tail().format(src=_BD_FROM))
+    return spark.sql("WITH " + _bd_tail(), src=cells)
 
 
 @register(

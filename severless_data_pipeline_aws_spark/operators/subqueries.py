@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import Tables, register_views
+from ..io import Tables
 from ..registry import register
 
 
@@ -34,13 +34,12 @@ from ..registry import register
     tags=("subquery", "scalar"),
 )
 def subquery_scalar_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return Tables(spark, sf_dir).sql(
         """
         SELECT o_orderkey, o_totalprice
-        FROM orders
+        FROM {orders}
         WHERE o_totalprice > 1.75 * (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(38,8))) AS DOUBLE)
-                                         / COUNT(*) FROM orders)
+                                         / COUNT(*) FROM {orders})
         """
     )
 
@@ -56,12 +55,11 @@ def subquery_scalar_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("subquery", "in"),
 )
 def subquery_in_hot_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return Tables(spark, sf_dir).sql(
         """
         SELECT p_partkey, p_name, p_retailprice
-        FROM part
-        WHERE p_partkey IN (SELECT l_partkey FROM lineitem WHERE l_quantity >= 49)
+        FROM {part}
+        WHERE p_partkey IN (SELECT l_partkey FROM {lineitem} WHERE l_quantity >= 49)
         """
     )
 
@@ -87,14 +85,13 @@ def subquery_in_hot_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("subquery", "exists"),
 )
 def subquery_correlated_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return Tables(spark, sf_dir).sql(
         """
         SELECT p_partkey, p_name
-        FROM part p
-        WHERE EXISTS (SELECT 1 FROM lineitem l
+        FROM {part} p
+        WHERE EXISTS (SELECT 1 FROM {lineitem} l
                       WHERE l.l_partkey = p.p_partkey AND l.l_quantity >= 49)
-          AND NOT EXISTS (SELECT 1 FROM lineitem l2
+          AND NOT EXISTS (SELECT 1 FROM {lineitem} l2
                           WHERE l2.l_partkey = p.p_partkey AND l2.l_returnflag = 'R'
                             AND l2.l_quantity >= 40)
         """
@@ -171,12 +168,11 @@ def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("subquery", "not_in", "nulls"),
 )
 def subquery_not_in_null_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return Tables(spark, sf_dir).sql(
         """
         SELECT c_custkey, c_nationkey
-        FROM customer
-        WHERE c_nationkey NOT IN (SELECT n_nationkey FROM nation
+        FROM {customer}
+        WHERE c_nationkey NOT IN (SELECT n_nationkey FROM {nation}
                                   WHERE n_regionkey = 2)
           AND c_custkey <= 1000
         """
@@ -209,12 +205,11 @@ def subquery_not_in_null_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("subquery", "lateral", "topk"),
 )
 def subquery_lateral_topn_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(
+    return Tables(spark, sf_dir).sql(
         """
         SELECT c.c_custkey, c.c_name, o.o_orderkey, o.o_totalprice
-        FROM customer c JOIN LATERAL (
-            SELECT o_orderkey, o_totalprice FROM orders
+        FROM {customer} c JOIN LATERAL (
+            SELECT o_orderkey, o_totalprice FROM {orders}
             WHERE o_custkey = c.c_custkey
             ORDER BY o_totalprice DESC, o_orderkey LIMIT 3
         ) o

@@ -1302,9 +1302,6 @@ def _bollinger_final(dbl) -> str:
     """
 
 
-_BOLL_FROM = "bollinger_day_sums"
-
-
 @register(
     "window_bollinger_bands",
     oracle=f"""
@@ -1313,7 +1310,7 @@ _BOLL_FROM = "bollinger_day_sums"
                    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DECIMAL(18,4)) AS x
             FROM orders GROUP BY 1
         ),
-        {_BOLL_FROM} AS (
+        bollinger_day_sums AS (
             SELECT day, x,
                    COUNT(*) OVER w AS nw,
                    SUM(x) OVER w AS sx,
@@ -1321,7 +1318,7 @@ _BOLL_FROM = "bollinger_day_sums"
             FROM daily
             WINDOW w AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
         )
-        {_bollinger_final(ddbl_sql).format(src=_BOLL_FROM)}
+        {_bollinger_final(ddbl_sql).format(src='bollinger_day_sums')}
     """,
     doc=(
         "Bollinger bands on daily revenue: 7-day moving average with "
@@ -1352,8 +1349,7 @@ def window_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("x").over(w).alias("sx"),
         F.sum(F.expr("CAST(x AS DECIMAL(19,4)) * x")).over(w).alias("sxx"),
     )
-    sums.createOrReplaceTempView(_BOLL_FROM)
-    return spark.sql(_bollinger_final(ddbl).format(src=_BOLL_FROM))
+    return spark.sql(_bollinger_final(ddbl), src=sums)
 
 
 _HW_M = 7  # season length (weekly)

@@ -232,13 +232,14 @@ def backfill_partitions(
     primitive: a late-data or bug-fix recompute of one day must not
     truncate the rest of the dataset (static overwrite mode would), and
     re-running the same backfill is a no-op semantically (idempotent).
+    The mode is a write option, so the session conf is untouched.
     """
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        corrected.write.mode("overwrite").partitionBy(partition_by).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        corrected.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_by)
+        .parquet(path)
+    )
     # the session's FileStatusCache still lists the replaced files;
     # readers would otherwise hit FILE_NOT_EXIST on the stale entries
     spark.catalog.refreshByPath(path)

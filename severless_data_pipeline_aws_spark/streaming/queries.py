@@ -14,7 +14,6 @@ streaming engine itself part of the correctness gate:
 
 from __future__ import annotations
 
-import os
 import tempfile
 import uuid
 
@@ -256,17 +255,41 @@ def _zscore_oracle() -> str:
     """
 
 
+#: state/shuffle partition count for the bounded replay streams (r11,
+#: guide §2.2): a streaming query freezes spark.sql.shuffle.partitions
+#: into its state layout at start, so every micro-batch commits that
+#: many state stores and spins that many Python state workers — pure
+#: per-batch overhead once the partition count exceeds the key space.
+#: These registered ops key on bounded spaces (sources, devices, 16
+#: user shards, event types), so the count is small and fixed.
+_STREAM_SHUFFLE_PARTITIONS = 8
+
+
+def _replay_session(spark: SparkSession) -> SparkSession:
+    """A child of ``spark`` for one replay stream. It shares the
+    SparkContext but has its own conf, temp views and stream manager, so
+    the partition clamp and the memory-sink table stay out of the
+    caller's session, and queries on that session may run meanwhile."""
+    replay = spark.newSession()
+    replay.conf.set("spark.sql.shuffle.partitions", str(_STREAM_SHUFFLE_PARTITIONS))
+    # a runtime-set zone is not inherited; windows and dates depend on it
+    replay.conf.set(
+        "spark.sql.session.timeZone", spark.conf.get("spark.sql.session.timeZone")
+    )
+    return replay
+
+
 def _replay_events_stream(spark: SparkSession, sf_dir: str, df=None) -> DataFrame:
     """Stage the events table (or ``df`` derived from it) into a temp
-    DIRECTORY and open it as a bounded file stream with the nanos->micros
-    ts conversion applied — the ONE copy of the replay preamble (file
-    streams monitor directories; the test table is a single parquet file;
-    at scale the landed table already is a directory, see
-    pipeline.land_parquet)."""
+    DIRECTORY and open it as a bounded file stream in a replay session
+    with the nanos->micros ts conversion applied — the ONE copy of the
+    replay preamble (file streams monitor directories; the test table is
+    a single parquet file; at scale the landed table already is a
+    directory, see pipeline.land_parquet)."""
     events = df if df is not None else spark.read.parquet(table_path(sf_dir, "events"))
     src = tempfile.mkdtemp(prefix="events_stream_")
     events.write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(events.schema).parquet(src)
+    stream = _replay_session(spark).readStream.schema(events.schema).parquet(src)
     # ts arrives as epoch-nanos bigint when the source parquet stored
     # TIMESTAMP(NANOS) (read under nanosAsLong), or as TIMESTAMP_NTZ for
     # timestamp[us] sources; watermarks need session-zoned TIMESTAMP.
@@ -278,54 +301,27 @@ def _replay_events_stream(spark: SparkSession, sf_dir: str, df=None) -> DataFram
     return stream
 
 
-#: state/shuffle partition count for the bounded replay streams (r11,
-#: guide §2.2): a streaming query freezes spark.sql.shuffle.partitions
-#: into its state layout at start, so every micro-batch commits that
-#: many state stores and spins that many Python state workers — pure
-#: per-batch overhead once the partition count exceeds the key space.
-#: These registered ops key on bounded spaces (sources, devices, 16
-#: user shards, event types), so the local default is small; production
-#: streams with unbounded keys (e.g. per-event dedup) size this to the
-#: cluster via the env knob instead of inheriting core count.
-_STREAM_SHUFFLE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "8")
-)
-
-
 def _run_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
-    # NOTE (r12 advice): the set/restore below mutates the SESSION-global
-    # shuffle-partition conf for the stream's lifetime, so no other query
-    # may be PLANNED on this session while a replay drains — it would
-    # silently inherit the clamp. Single-threaded use is the contract
-    # here (bench and oracle harness run queries sequentially).
+    """Drain ``stream_df`` (availableNow) into a memory sink and return
+    its table, read through the stream's own session."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    spark = stream_df.sparkSession
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_STREAM_SHUFFLE_PARTITIONS)
+    q = (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
     )
-    try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        # r12 (advice): awaitTermination returns False on timeout with
-        # the stream still running — reading the memory table then would
-        # silently return a partial replay. Fail loudly instead.
-        if not q.awaitTermination(300):
-            timeout = RuntimeError(
-                f"availableNow replay {name} did not drain within 300s"
-            )
-            try:
-                q.stop()
-            except Exception as exc:  # the timeout stays the error raised
-                raise timeout from exc
-            raise timeout
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    # r12 (advice): awaitTermination returns False on timeout with the
+    # stream still running — reading the memory table then would
+    # silently return a partial replay. Fail loudly instead.
+    if not q.awaitTermination(300):
+        timeout = RuntimeError(f"availableNow replay {name} did not drain within 300s")
+        try:
+            q.stop()
+        except Exception as exc:  # the timeout stays the error raised
+            raise timeout from exc
+        raise timeout
     return stream_df.sparkSession.table(name)
 
 
@@ -436,7 +432,7 @@ def streaming_stateful_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = tempfile.mkdtemp(prefix="drift_steps_")
     steps.coalesce(1).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(stateful.STEP_SCHEMA).parquet(src)
+    stream = _replay_session(spark).readStream.schema(stateful.STEP_SCHEMA).parquet(src)
     return _run_to_memory(stateful.drift_walk(stream), "append")
 
 
@@ -653,7 +649,8 @@ def _replay_events_stream_phased(
         flush.coalesce(1).write.parquet(f"{src}/phase={n_phases + j:02d}")
         _time.sleep(0.05)
     return (
-        spark.readStream.schema(events.schema)
+        _replay_session(spark)
+        .readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/phase=*")
     )

@@ -41,16 +41,15 @@ def test_not_in_goes_empty_on_null(spark, sf_dir):
     """SQL NOT IN three-valued logic: a NULL in the inner set empties
     the result — the behavior that distinguishes the null-aware anti
     join from a plain anti join."""
-    from severless_data_pipeline_aws_spark.io import register_views
+    from severless_data_pipeline_aws_spark.io import Tables
 
-    register_views(spark, sf_dir)
-    n = spark.sql(
+    n = Tables(spark, sf_dir).sql(
         """
-        SELECT count(*) AS n FROM customer
+        SELECT count(*) AS n FROM {customer}
         WHERE c_nationkey NOT IN (
             SELECT CASE WHEN n_regionkey = 2 THEN n_nationkey
                         ELSE NULL END
-            FROM nation)
+            FROM {nation})
         """
     ).first()["n"]
     assert n == 0

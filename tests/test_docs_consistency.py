@@ -521,6 +521,49 @@ def test_no_code_reads_round_ledgers():
     assert hits == allowed, f"code names round records: {dict(hits - allowed)}"
 
 
+#: (file under the package, enclosing function) pairs that may write
+#: session state: load_table's nanosAsLong set (a caller may pass a
+#: session not built by get_spark) and the replay's own child session.
+#: session.py is the session factory and is not scanned.
+_SESSION_WRITERS = {
+    ("io.py", "load_table"),
+    (os.path.join("streaming", "queries.py"), "_replay_session"),
+}
+
+
+def test_no_query_writes_session_state():
+    """Queries bind intermediates as spark.sql DataFrame arguments and
+    run replays in a child session, so no package code outside the
+    allowed writers registers a temp view or sets a session conf."""
+    import ast
+    import glob
+
+    pkg = os.path.join(os.path.dirname(_COVERAGE), "severless_data_pipeline_aws_spark")
+    hits = []
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, pkg)
+        if rel == "session.py":
+            continue
+        tree = ast.parse(open(path).read())
+        allowed = [
+            range(node.lineno, node.end_lineno + 1)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.FunctionDef) and (rel, node.name) in _SESSION_WRITERS
+        ]
+        for node in ast.walk(tree):
+            name = getattr(node, "attr", None) or getattr(node, "id", None)
+            conf_set = (
+                name == "set"
+                and isinstance(node, ast.Attribute)
+                and getattr(node.value, "attr", None) == "conf"
+            )
+            if (name in ("createOrReplaceTempView", "register_views") or conf_set) and not any(
+                node.lineno in r for r in allowed
+            ):
+                hits.append(f"{rel}:{node.lineno} {name}")
+    assert not hits, f"session-state writes outside the allowed writers: {hits}"
+
+
 def test_query_counts_pinned_to_registry():
     """COVERAGE.md's headline counts must track the registry exactly —
     VERDICT r2 flagged docs drift (319 vs 320). The counts are parsed

@@ -39,9 +39,6 @@ def test_benign_shapes_still_match(spark, sf_dir):
     """Dates (Spark date object vs DuckDB midnight Timestamp), real
     timestamps (ns vs us pandas units), NULLs in every family, JSON-
     encoded arrays, and exact doubles must all canon equal."""
-    from severless_data_pipeline_aws_spark.io import register_views
-
-    register_views(spark, sf_dir)
     sql = """
         SELECT DATE '2024-01-05' AS d,
                TIMESTAMP '2024-01-05 03:04:05.123' AS ts,
@@ -102,9 +99,6 @@ def test_complex_cells_rejected_loudly(spark, sf_dir):
 
 
 def test_row_count_and_vacuous_guards(spark, sf_dir):
-    from severless_data_pipeline_aws_spark.io import register_views
-
-    register_views(spark, sf_dir)
     con = duckdb_connect(sf_dir)
     try:
         df0 = spark.sql("SELECT CAST(1 AS BIGINT) AS x WHERE 1 = 0")

@@ -7,8 +7,9 @@ Pins the internals the r12 optimization round changed:
   rows the default ``localCheckpoint`` mode returns.
 - ``spread()``: repartitioning is a pure layout change — row multisets
   are untouched, and well-split inputs pass through unchanged.
-- pair generation from bucket lists (minhash LSH / simhash / ahash):
-  the i<j explode must reproduce the band self-join's candidate set.
+- pair generation from bucket lists (``bucket_pairs``: minhash LSH /
+  simhash / ahash / basket pairs): the i<j explode must reproduce the
+  band self-join's candidate set.
 - the pointer-jumping CC loop: labels must match the one-hop min-label
   fixpoint (both are pinned to the recursive-CTE oracle elsewhere; this
   cross-checks the two Spark strategies directly).
@@ -17,11 +18,13 @@ Pins the internals the r12 optimization round changed:
 from __future__ import annotations
 
 import os
+from itertools import combinations
 
 import pytest
 from pyspark.sql import functions as F
 
 from severless_data_pipeline_aws_spark.operators._helpers import (
+    bucket_pairs,
     materialize,
     spread,
 )
@@ -100,6 +103,15 @@ def test_bucket_list_pairs_match_self_join(spark):
         .distinct()
     )
     assert _rows(minhash_lsh_candidates(docs)) == _rows(joined)
+
+    # the shared generator itself: exactly the i<j pairs, for every size
+    arrs = spark.createDataFrame(
+        [(k, list(range(10, 10 + k))) for k in range(5)], "k int, ds array<int>"
+    )
+    pairs = arrs.select("k", bucket_pairs("ds", "x AS a, y AS b").alias("p"))
+    assert _rows(pairs.select("k", "p.a", "p.b")) == sorted(
+        (k, a, b) for k in range(5) for a, b in combinations(range(10, 10 + k), 2)
+    )
 
 
 def test_pointer_jump_cc_matches_star(spark):

@@ -1802,7 +1802,8 @@ def test_reservoir_steps_semilattice_order_and_duplicate_invariance():
 
 def test_replay_timeout_survives_a_failing_stop():
     """A replay that does not drain raises the drain timeout, even when
-    stopping the stream fails too (the stop error is only its cause)."""
+    stopping the stream fails too (the stop error is only its cause),
+    and the stream's session conf is never written."""
     from severless_data_pipeline_aws_spark.streaming.queries import (
         _run_to_memory,
     )
@@ -1818,9 +1819,11 @@ def test_replay_timeout_survives_a_failing_stop():
         def __getattr__(self, name):
             return lambda *args, **kwargs: Query() if name == "start" else self
 
+    writes = []
+
     class Conf(dict):
         def set(self, key, value):
-            self[key] = value
+            writes.append((key, value))
 
     class Stream:
         writeStream = Writer()
@@ -1831,4 +1834,4 @@ def test_replay_timeout_survives_a_failing_stop():
     with pytest.raises(RuntimeError, match="did not drain") as info:
         _run_to_memory(Stream(), "append")
     assert isinstance(info.value.__cause__, TimeoutError)
-    assert Stream.sparkSession.conf["spark.sql.shuffle.partitions"] == "4"
+    assert writes == []
