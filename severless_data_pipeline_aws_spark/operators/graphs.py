@@ -4,10 +4,17 @@ The second iterative algorithm family after label-propagation
 connected components (`dedup.py::dedup_connected_components`): BFS
 shortest hop distance, the Pregel pattern expressed as a bounded loop
 of shuffle joins. Each round is frontier ⋈ edges → anti-join visited —
-one shuffle per hop, with the frontier persisted so lineage doesn't
+one shuffle per hop, with the frontier materialized so lineage doesn't
 re-expand. At 100 TB the same loop runs unchanged on a cluster: the
 edge list is hash-partitioned on src once and every round reuses that
 partitioning; the visited set stays bucketed by node.
+
+Nothing here is persisted: an intermediate that more than one job
+reads is checkpointed eagerly (``materialize()`` for part-supplier
+frames, which grow with lineitem; plain ``localCheckpoint`` for the
+<= 25-node nation graph), so a query leaves no blocks in the
+session-shared cache. Every nation co-trade query starts from one
+edge builder, ``_co_pairs``.
 
 Reference parity: the reference has no graph operators — this extends
 the engine for supply-chain-reach / contamination-radius questions a
@@ -21,6 +28,49 @@ from pyspark.sql import functions as F
 
 from ..io import Tables
 from ..registry import register
+from ._helpers import materialize
+
+
+def _co_pairs(t: Tables, min_price: int) -> DataFrame:
+    """Distinct directed nation co-trade pairs (a, b) with a <> b:
+    customer nation -> supplier nation on orders priced above
+    ``min_price``, in the nation keys' own int type. Callers that need
+    bigint cast after the distinct (same set, same output schema)."""
+    return (
+        t.orders.filter(F.col("o_totalprice") > min_price)
+        .join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
+        .join(t.lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
+        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
+        .select(F.col("c_nationkey").alias("a"), F.col("s_nationkey").alias("b"))
+        .distinct()
+    )
+
+
+def _co_edges(t: Tables):
+    """Spark twin of ``_CO_EDGE_SQL``: (ordered u < v edge list of the
+    high-value co-trade graph, degree table)."""
+    # downstream shapes reference the edge list 3-6 times (degree
+    # union, symmetric expansion, the triangle 3-join). A lazy persist
+    # is NOT enough: within one action the parallel branches race the
+    # cache and each re-executes the 4-table co-occurrence join — the
+    # dominant cost at any scale. Eager localCheckpoint materializes
+    # once at build time; the edge list is nation-pair bounded (<= 625
+    # rows at ANY SF), so the checkpoint is metadata-sized.
+    e = (
+        _co_pairs(t, 400000)
+        .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    deg = (
+        e.select(F.col("u").alias("node"))
+        .union(e.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
+    )
+    return e, deg
+
 
 _MAX_HOPS = 3
 
@@ -57,51 +107,53 @@ _MAX_HOPS = 3
         "symmetric edge list, distinct, anti-join against the visited "
         "set, union — so min-distance holds by construction (a node "
         "is claimed the first round it appears and excluded after). "
-        "Frontier and visited are persisted each round to cut lineage "
-        "re-execution. The oracle is the same traversal as a DuckDB "
-        "recursive CTE whose UNION dedups (node, hop) pairs, keeping "
-        "the recursion polynomial instead of path-enumerating."
+        "The seed is a one-row min() aggregate inside the plan; the "
+        "edge list, the seed and each round's frontier are "
+        "materialized once to cut lineage re-execution. The oracle is "
+        "the same traversal as a DuckDB recursive CTE whose UNION "
+        "dedups (node, hop) pairs, keeping the recursion polynomial "
+        "instead of path-enumerating."
     ),
     tags=("graph", "join", "iterative"),
 )
 def graph_bfs_part_supplier_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     li = t.lineitem
-    # the seed is a query parameter (one scalar), not a data-path collect
-    seed_key = li.agg(F.min("l_partkey")).first()[0]
-
     pairs = li.select(
         F.concat(F.lit("p:"), F.col("l_partkey").cast("string")).alias("a"),
         F.concat(F.lit("s:"), F.col("l_suppkey").cast("string")).alias("b"),
     ).distinct()
     # materialize the edge index ONCE — every BFS round joins against the
-    # same cached, pre-shuffled edge list instead of re-running the
-    # distinct over the fact table per round (lineage re-execution is the
-    # classic iterative-algorithm trap; on a cluster this is the
-    # hash-partitioned edge RDD every Pregel round reuses)
-    sym = (
+    # same pre-shuffled edge list instead of re-running the distinct over
+    # the fact table per round (lineage re-execution is the classic
+    # iterative-algorithm trap; on a cluster this is the hash-partitioned
+    # edge RDD every Pregel round reuses)
+    sym = materialize(
         pairs.selectExpr("a AS src", "b AS dst")
         .union(pairs.selectExpr("b AS src", "a AS dst"))
-        .repartition("src")  # cache carries the join-key partitioning:
-        .persist()           # no round re-shuffles the edge side
-    )
+        .repartition("src")  # the checkpoint keeps the join-key partitioning:
+    )                        # no round re-shuffles the edge side
 
-    visited = spark.createDataFrame(
-        [(f"p:{seed_key}", 0)], "node string, hop bigint"
-    )
-    frontier = visited
+    visited = frontier = materialize(_seed(li, "hop"))
     for hop in range(1, _MAX_HOPS + 1):
-        nxt = (
+        nxt = materialize(
             frontier.join(sym, frontier["node"] == sym["src"])
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
             .withColumn("hop", F.lit(hop).cast("bigint"))
-            .persist()
         )
         visited = visited.union(nxt)
         frontier = nxt
     return visited
+
+
+def _seed(li: DataFrame, dist: str) -> DataFrame:
+    """One row (node = 'p:' || min(l_partkey), ``dist`` = 0), built in the
+    plan: on an empty lineitem the node is NULL, as in the oracle."""
+    return li.agg(
+        F.concat(F.lit("p:"), F.min("l_partkey").cast("string")).alias("node")
+    ).select("node", F.lit(0).cast("bigint").alias(dist))
 
 
 @register(
@@ -140,20 +192,7 @@ def graph_bfs_part_supplier_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("graph", "join"),
 )
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = Tables(spark, sf_dir)
-    co = (
-        t.orders.filter(F.col("o_totalprice") > 400000)
-        .join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(t.lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(F.col("c_nationkey").alias("a"), F.col("s_nationkey").alias("b"))
-        .distinct()
-    )
-    e = (
-        co.filter(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-        .distinct()
-    )
+    e, _deg = _co_edges(Tables(spark, sf_dir))
     n_edges = e.count()  # scalar for the report column (edge list is tiny)
     e1 = e.select(F.col("u").alias("x"), F.col("v").alias("y"))
     e2 = e.select(F.col("u").alias("y"), F.col("v").alias("z"))
@@ -209,8 +248,8 @@ _RELAX_SQL = """
         "quantity, an exact integer). Each Spark round relaxes every "
         "edge once (frontier-less Bellman-Ford step: distances ⋈ "
         "edges, union, min-combine — two shuffles on the same key) "
-        "with lineage cut per round; the cached edge index carries its "
-        "join-key partitioning across rounds. The oracle unrolls the "
+        "with lineage cut per round; the materialized edge index carries "
+        "its join-key partitioning across rounds. The oracle unrolls the "
         "identical three rounds as chained CTE aggregates, so costs "
         "are hash-exact — no recursion, no path enumeration."
     ),
@@ -219,29 +258,23 @@ _RELAX_SQL = """
 def graph_sssp_bounded_minplus(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
     li = t.lineitem
-    seed_key = li.agg(F.min("l_partkey")).first()[0]
-
     pairs = li.groupBy(
         F.concat(F.lit("p:"), F.col("l_partkey").cast("string")).alias("a"),
         F.concat(F.lit("s:"), F.col("l_suppkey").cast("string")).alias("b"),
     ).agg(F.min("l_quantity").cast("bigint").alias("w"))
-    sym = (
+    sym = materialize(
         pairs.selectExpr("a AS src", "b AS dst", "w")
         .union(pairs.selectExpr("b AS src", "a AS dst", "w"))
         .repartition("src")
-        .persist()
     )
 
-    dist = spark.createDataFrame([(f"p:{seed_key}", 0)], "node string, cost bigint")
+    dist = _seed(li, "cost")
     for _ in range(_SSSP_ROUNDS):
         relaxed = dist.join(sym, dist["node"] == sym["src"]).select(
             F.col("dst").alias("node"), (F.col("cost") + F.col("w")).alias("cost")
         )
-        dist = (
-            dist.union(relaxed)
-            .groupBy("node")
-            .agg(F.min("cost").alias("cost"))
-            .localCheckpoint(eager=True)
+        dist = materialize(
+            dist.union(relaxed).groupBy("node").agg(F.min("cost").alias("cost"))
         )
     return dist
 
@@ -319,18 +352,8 @@ _PR_STEP_SQL = """
     tags=("graph", "join", "iterative"),
 )
 def graph_pagerank_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = Tables(spark, sf_dir)
-    co = (
-        t.orders.filter(F.col("o_totalprice") > 400000)
-        .join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(t.lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .select(
-            F.col("c_nationkey").cast("bigint").alias("a"),
-            F.col("s_nationkey").cast("bigint").alias("b"),
-        )
-        .distinct()
+    co = _co_pairs(Tables(spark, sf_dir), 400000).selectExpr(
+        "CAST(a AS BIGINT) AS a", "CAST(b AS BIGINT) AS b"
     )
     graph = co.agg(
         F.array_sort(F.collect_list(F.struct("a", "b"))).alias("e"),
@@ -429,30 +452,11 @@ def graph_pagerank_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def graph_modularity_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
-    co = (
-        t.orders.filter(F.col("o_totalprice") > 400000)
-        .join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(t.lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(F.col("c_nationkey").alias("a"), F.col("s_nationkey").alias("b"))
-        .distinct()
-    )
-    e = (
-        co.filter(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-        .distinct()
-        .persist()
-    )
+    e, deg = _co_edges(t)
     m = e.agg(F.count(F.lit(1)).alias("m"))
     reg = (
         t.nation.join(F.broadcast(t.region), F.col("n_regionkey") == F.col("r_regionkey"))
         .select(F.col("n_nationkey").alias("node"), F.col("r_name").alias("community"))
-    )
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
     )
     ru = reg.select(F.col("node").alias("u"), F.col("community").alias("cu"))
     rv = reg.select(F.col("node").alias("v"), F.col("community").alias("cv"))
@@ -466,7 +470,7 @@ def graph_modularity_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     dsum = (
         deg.join(F.broadcast(reg), "node")
         .groupBy("community")
-        .agg(F.sum("degree").cast("bigint").alias("dc"))
+        .agg(F.sum("d").cast("bigint").alias("dc"))
     )
     return (
         dsum.join(intra, "community", "left")
@@ -689,9 +693,9 @@ _HITS_NORM_SQL = """
         "list) + sequential aggregate == the oracle's ordered "
         "list_reduce) and the normalizing constant folds in node "
         "order, so all four rounds are hash-exact, not just close. "
-        "The edge list is built once and persisted; every half-step "
-        "joins against it (the hash-partitioned edge index of any "
-        "Pregel round). Each normalization broadcasts a one-row "
+        "The edge list and node set are checkpointed once; every "
+        "half-step joins against them (the hash-partitioned edge index "
+        "of any Pregel round). Each normalization broadcasts a one-row "
         "scalar (whitelisted BNLJ). The nation graph is metadata-"
         "scale; on a billion-node graph the identical loop runs with "
         "the edge list bucketed by node and plain sums (order-pinning "
@@ -700,25 +704,16 @@ _HITS_NORM_SQL = """
     tags=("graph", "join", "iterative"),
 )
 def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = Tables(spark, sf_dir)
     co = (
-        t.orders.filter(F.col("o_totalprice") > 400000)
-        .join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(t.lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .select(
-            F.col("c_nationkey").cast("bigint").alias("a"),
-            F.col("s_nationkey").cast("bigint").alias("b"),
-        )
-        .distinct()
-        .persist()
+        _co_pairs(Tables(spark, sf_dir), 400000)
+        .selectExpr("CAST(a AS BIGINT) AS a", "CAST(b AS BIGINT) AS b")
+        .localCheckpoint(eager=True)
     )
     nodes = (
         co.select(F.col("a").alias("v"))
         .union(co.select(F.col("b").alias("v")))
         .distinct()
-        .persist()
+        .localCheckpoint(eager=True)
     )
     if nodes.rdd.isEmpty():
         return spark.createDataFrame(
@@ -769,8 +764,8 @@ _KCORE_K = 2       # minimum in-core degree
 # graph family, and tests/test_r4_invariants.py asserts round 4 is a
 # FIXPOINT (round 5 would remove nothing) at every test SF — so the
 # unroll IS the converged k-core. A general deployment on an unbounded
-# graph should instead iterate to fixpoint with persist+localCheckpoint
-# per round (the connected-components pattern in dedup.py), with the
+# graph should instead iterate to fixpoint with one materialize() per
+# round (the connected-components pattern in dedup.py), with the
 # round count bounded by the graph's degeneracy-ordering depth.
 _KCORE_ROUNDS = 4
 
@@ -830,32 +825,23 @@ _KCORE_EDGE_SQL = """
         "unroll IS the converged k-core, not an approximation. All "
         "arithmetic is integer degree counting — hash-exact with no "
         "float anywhere. Each Spark round re-derives degrees from the "
-        "persisted current edge set and localCheckpoints, the Pregel "
-        "peel; on a billion-node graph the same loop runs with edges "
-        "bucketed by endpoint (two shuffles per round) and the round "
+        "checkpointed current edge set and localCheckpoints the "
+        "survivors, the Pregel peel; on a billion-node graph the same "
+        "loop runs with edges bucketed by endpoint (two shuffles per "
+        "round) and the round "
         "count bounded by the graph's degeneracy ordering depth."
     ),
     tags=("graph", "join", "iterative"),
 )
 def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = Tables(spark, sf_dir)
-    base = (
-        t.orders.filter(F.col("o_totalprice") > 450000)
-        .join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(t.lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .select(
-            F.col("c_nationkey").cast("bigint").alias("a"),
-            F.col("s_nationkey").cast("bigint").alias("b"),
-        )
-        .distinct()
+    base = _co_pairs(Tables(spark, sf_dir), 450000).selectExpr(
+        "CAST(a AS BIGINT) AS a", "CAST(b AS BIGINT) AS b"
     )
     g = (
         base.selectExpr("a AS u", "b AS v")
         .union(base.selectExpr("b AS u", "a AS v"))
         .distinct()
-        .persist()
+        .localCheckpoint(eager=True)
     )
     for _ in range(_KCORE_ROUNDS):
         deg = g.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
@@ -879,11 +865,56 @@ def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Unrolled multi-source BFS rounds. 6 suffices HERE for the same reason
 # _KCORE_ROUNDS=4 does: the co-trade graph has <=25 nation nodes and is
 # dense (high-value order pairs), so its diameter is far below 6, and
-# tests/test_r5_invariants.py asserts round 6 claims no new (src, node)
-# pair at every test SF — the unroll IS the converged all-pairs table.
-# A general deployment iterates to fixpoint with persist+localCheckpoint
-# per round (the connected-components pattern in dedup.py).
+# tests/test_r5_invariants.py checks every (root, node, dist) row against
+# an unbounded BFS at every test SF — the unroll IS the converged
+# all-pairs table. A general deployment iterates to fixpoint with one
+# materialize() per round (the connected-components pattern in dedup.py).
 _CLOSENESS_ROUNDS = 6
+
+
+def _nation_hops(t: Tables) -> DataFrame:
+    """(root, node, dist, n_nodes): hop distance from every node of the
+    undirected high-value co-trade graph to each node it reaches within
+    ``_CLOSENESS_ROUNDS`` hops (root itself at 0), plus the graph's node
+    count. One lazy plan: the <= 25-node graph is gathered into one row
+    (sorted node list + adjacency map), the roots are exploded, and each
+    root folds its reachable-set layers L0 = {root}, L(i) = L(i-1) plus
+    the neighbors of L(i-1). A node's hop count is the number of layers
+    that do not contain it; a node no layer contains is unreachable."""
+    co = _co_pairs(t, 400000)
+    graph = (
+        co.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+        .union(co.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+        .groupBy("src")
+        .agg(F.collect_set("dst").alias("nbrs"))
+        .agg(
+            F.array_sort(F.collect_list("src")).alias("vs"),
+            F.map_from_entries(F.collect_list(F.struct("src", "nbrs"))).alias("adj"),
+        )
+    )
+    layers = graph.select(F.explode("vs").alias("root"), "vs", "adj").select(
+        "root",
+        "vs",
+        F.expr(
+            f"""aggregate(sequence(1, {_CLOSENESS_ROUNDS}), array(array(root)),
+                (ls, i) -> concat(ls, array(array_union(ls[i - 1],
+                    flatten(transform(ls[i - 1], x -> adj[x]))))))"""
+        ).alias("layers"),
+    )
+    return (
+        layers.select(
+            "root", F.explode("vs").alias("node"), "layers", F.size("vs").alias("n_nodes")
+        )
+        .select(
+            "root",
+            "node",
+            F.expr("size(filter(layers, l -> NOT array_contains(l, node)))")
+            .cast("bigint")
+            .alias("dist"),
+            "n_nodes",
+        )
+        .filter(F.col("dist") <= _CLOSENESS_ROUNDS)
+    )
 
 
 @register(
@@ -933,56 +964,22 @@ _CLOSENESS_ROUNDS = 6
         "disconnected components are scored fairly: (r/(n-1))*(r/d) "
         "with r = reachable peers, d = total hop distance) — on a "
         "document-citation graph this ranks the most central corpus "
-        "hubs before sampling around them. Multi-source BFS as "
-        f"{_CLOSENESS_ROUNDS} unrolled Pregel rounds (frontier join + "
-        "distinct + anti-join against visited, identical to "
-        "graph_bfs_part_supplier_hops but seeded from EVERY node); the "
-        "graph is bounded (<=25 nations), so state is (25 x 25) pairs "
-        "of metadata, and the fixpoint within the unroll is asserted "
-        "in pytest. All arithmetic is integer until the two final "
-        "IEEE divisions, written identically on both engines. The "
+        "hubs before sampling around them. Multi-source BFS with "
+        f"{_CLOSENESS_ROUNDS} unrolled expansions, seeded from EVERY "
+        "node: the graph is bounded (<=25 nations), so it is gathered "
+        "into one row and each root folds its reachable-set layers "
+        "with aggregate() in one lazy plan (no per-round jobs); hop "
+        "count = number of layers missing the node. The distances are "
+        "checked against an unbounded BFS in pytest. All arithmetic "
+        "is integer until the two final IEEE divisions, written "
+        "identically on both engines. The "
         "oracle replays the traversal as a multi-source recursive CTE "
         "whose UNION dedups (root, node, hop)."
     ),
     tags=("graph", "join", "iterative"),
 )
 def graph_closeness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = Tables(spark, sf_dir)
-    co = (
-        t.orders.filter(F.col("o_totalprice") > 400000)
-        .join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(t.lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .select(F.col("c_nationkey").alias("a"), F.col("s_nationkey").alias("b"))
-        .distinct()
-    )
-    sym = (
-        co.selectExpr("a AS src", "b AS dst")
-        .union(co.selectExpr("b AS src", "a AS dst"))
-        .distinct()
-        .repartition("src")
-        .persist()
-    )
-    nodes = sym.select(F.col("src").alias("node")).distinct().persist()
-    n_nodes = nodes.count()  # bounded metadata (<=25), a query parameter
-
-    visited = nodes.select(
-        F.col("node").alias("root"), "node", F.lit(0).cast("bigint").alias("dist")
-    ).persist()
-    frontier = visited
-    for hop in range(1, _CLOSENESS_ROUNDS + 1):
-        nxt = (
-            frontier.join(sym, frontier["node"] == sym["src"])
-            .select("root", F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("root", "node"), ["root", "node"], "left_anti")
-            .withColumn("dist", F.lit(hop).cast("bigint"))
-            .persist()
-        )
-        visited = visited.union(nxt).persist()
-        frontier = nxt
-    agg = visited.groupBy("root").agg(
+    agg = _nation_hops(Tables(spark, sf_dir)).groupBy("root", "n_nodes").agg(
         (F.count(F.lit(1)) - 1).cast("bigint").alias("n_reachable"),
         F.sum("dist").cast("bigint").alias("total_dist"),
     )
@@ -993,7 +990,7 @@ def graph_closeness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_dist",
             F.expr(
                 "CASE WHEN total_dist = 0 THEN 0.0 "
-                f"ELSE (CAST(n_reachable AS DOUBLE) / ({n_nodes} - 1)) "
+                "ELSE (CAST(n_reachable AS DOUBLE) / (n_nodes - 1)) "
                 "* (CAST(n_reachable AS DOUBLE) / total_dist) END"
             ).alias("closeness"),
         )
@@ -1065,24 +1062,14 @@ _LPA_STEP_SQL = """
 def graph_label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    t = Tables(spark, sf_dir)
-    co = (
-        t.orders.filter(F.col("o_totalprice") > 400000)
-        .join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(t.lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .select(
-            F.col("c_nationkey").cast("bigint").alias("a"),
-            F.col("s_nationkey").cast("bigint").alias("b"),
-        )
-        .distinct()
+    co = _co_pairs(Tables(spark, sf_dir), 400000).selectExpr(
+        "CAST(a AS BIGINT) AS a", "CAST(b AS BIGINT) AS b"
     )
     sym = (
         co.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .union(co.select(F.col("b").alias("src"), F.col("a").alias("dst")))
         .distinct()
-        .persist()
+        .localCheckpoint(eager=True)
     )
     labels = sym.select(F.col("src").alias("v")).distinct().select(
         "v", F.col("v").alias("lbl")
@@ -1308,27 +1295,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("graph", "agg"),
 )
 def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = Tables(spark, sf_dir)
-    co = (
-        t.orders.filter(F.col("o_totalprice") > 400000)
-        .join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(t.lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(F.col("c_nationkey").alias("a"), F.col("s_nationkey").alias("b"))
-        .distinct()
-    )
-    e = (
-        co.filter(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-        .distinct()
-        .persist()
-    )
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .union(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    )
+    e, deg = _co_edges(Tables(spark, sf_dir))
     e1 = e.select(F.col("u").alias("x"), F.col("v").alias("y"))
     e2 = e.select(F.col("u").alias("y"), F.col("v").alias("z"))
     e3 = e.select(F.col("u").alias("x"), F.col("v").alias("z"))
@@ -1486,20 +1453,7 @@ def graph_jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("graph",),
 )
 def graph_katz_centrality_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = Tables(spark, sf_dir)
-    co = (
-        t.orders.filter(F.col("o_totalprice") > 400000)
-        .join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(t.lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(F.col("c_nationkey").alias("a"), F.col("s_nationkey").alias("b"))
-        .distinct()
-    )
-    e = (
-        co.filter(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-        .distinct()
-    )
+    e, _deg = _co_edges(Tables(spark, sf_dir))
     se = e.select("u", "v").unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     p1 = se.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("c1")
@@ -1997,49 +1951,14 @@ def graph_preferential_attachment_scores(spark: SparkSession, sf_dir: str) -> Da
         "60, so Sum(1/d) is kept as the EXACT integer Sum(60/d) "
         "(integer division, remainder provably zero) until one shared "
         "final division — no float accumulation across peers in any "
-        "order. Same multi-source Pregel BFS as closeness "
-        "(frontier join + distinct + anti-join, <= 25-node metadata "
-        "state); oracle replays it as the recursive-CTE walk."
+        "order. Same one-plan multi-source BFS as closeness (the "
+        "<= 25-node graph in one row, reachable-set layers folded per "
+        "root); oracle replays it as the recursive-CTE walk."
     ),
     tags=("graph", "join", "iterative"),
 )
 def graph_harmonic_centrality_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = Tables(spark, sf_dir)
-    co = (
-        t.orders.filter(F.col("o_totalprice") > 400000)
-        .join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(t.lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .select(F.col("c_nationkey").alias("a"), F.col("s_nationkey").alias("b"))
-        .distinct()
-    )
-    sym = (
-        co.selectExpr("a AS src", "b AS dst")
-        .union(co.selectExpr("b AS src", "a AS dst"))
-        .distinct()
-        .repartition("src")
-        .persist()
-    )
-    nodes = sym.select(F.col("src").alias("node")).distinct().persist()
-    n_nodes = nodes.count()  # bounded metadata (<=25), a query parameter
-
-    visited = nodes.select(
-        F.col("node").alias("root"), "node", F.lit(0).cast("bigint").alias("dist")
-    ).persist()
-    frontier = visited
-    for hop in range(1, _CLOSENESS_ROUNDS + 1):
-        nxt = (
-            frontier.join(sym, frontier["node"] == sym["src"])
-            .select("root", F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("root", "node"), ["root", "node"], "left_anti")
-            .withColumn("dist", F.lit(hop).cast("bigint"))
-            .persist()
-        )
-        visited = visited.union(nxt).persist()
-        frontier = nxt
-    agg = visited.groupBy("root").agg(
+    agg = _nation_hops(Tables(spark, sf_dir)).groupBy("root", "n_nodes").agg(
         (F.count(F.lit(1)) - 1).cast("bigint").alias("n_reachable"),
         F.expr(
             "CAST(SUM(CASE WHEN dist > 0 THEN 60 DIV dist ELSE 0 END) AS BIGINT)"
@@ -2053,7 +1972,7 @@ def graph_harmonic_centrality_bounded(spark: SparkSession, sf_dir: str) -> DataF
             "eccentricity",
             F.expr("CAST(harmonic_x60 AS DOUBLE) / 60.0").alias("harmonic"),
             F.expr(
-                f"CAST(harmonic_x60 AS DOUBLE) / (60.0 * CAST({n_nodes} - 1 AS DOUBLE))"
+                "CAST(harmonic_x60 AS DOUBLE) / (60.0 * CAST(n_nodes - 1 AS DOUBLE))"
             ).alias("harmonic_normalized"),
         )
         .orderBy("nationkey")
@@ -2090,38 +2009,6 @@ _CO_EDGE_SQL = """
             ) GROUP BY node
         )
 """
-
-
-def _co_edges(t: Tables):
-    """Spark twin of ``_CO_EDGE_SQL``: (ordered edge list, degree table)."""
-    co = (
-        t.orders.filter(F.col("o_totalprice") > 400000)
-        .join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(t.lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(F.col("c_nationkey").alias("a"), F.col("s_nationkey").alias("b"))
-        .distinct()
-    )
-    e = (
-        co.filter(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-        .distinct()
-    )
-    # downstream shapes reference the edge list 3-6 times (degree
-    # union, symmetric expansion, the triangle 3-join). A lazy persist
-    # is NOT enough: within one action the parallel branches race the
-    # cache and each re-executes the 4-table co-occurrence join — the
-    # dominant cost at any scale. Eager localCheckpoint materializes
-    # once at build time; the edge list is nation-pair bounded (<= 625
-    # rows at ANY SF), so the checkpoint is metadata-sized.
-    e = e.localCheckpoint(eager=True)
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .union(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    )
-    return e, deg
 
 
 @register(

@@ -531,10 +531,28 @@ _SESSION_WRITERS = {
 }
 
 
+#: (file, function) pairs that may still persist or cache a Dataset.
+#: A persisted Dataset sits in the cache manager every session shares,
+#: so it is session state too; multi-job intermediates elsewhere are
+#: checkpointed eagerly instead. The list only shrinks.
+_PERSISTERS = {
+    ("cache.py", "get_or_build"),
+    (os.path.join("operators", "_helpers.py"), "materialize"),
+    (os.path.join("operators", "dashboard.py"), "dashboard_cached_status_counts"),
+    (os.path.join("operators", "dedup.py"), "prefix_jaccard_candidates"),
+    (os.path.join("operators", "funnel.py"), "funnel_market_basket_lift"),
+    (os.path.join("operators", "sampling.py"), "sampling_kcenter_greedy_coreset"),
+    (os.path.join("operators", "similarity.py"), "pq_codebook"),
+    (os.path.join("operators", "similarity.py"), "similarity_kmeans_lloyd"),
+    (os.path.join("operators", "similarity.py"), "similarity_pca_top_component"),
+}
+
+
 def test_no_query_writes_session_state():
-    """Queries bind intermediates as spark.sql DataFrame arguments and
-    run replays in a child session, so no package code outside the
-    allowed writers registers a temp view or sets a session conf."""
+    """Queries bind intermediates as spark.sql DataFrame arguments, run
+    replays in a child session and checkpoint instead of persisting, so
+    no package code outside the allowed writers registers a temp view,
+    sets a session conf or persists a Dataset."""
     import ast
     import glob
 
@@ -545,11 +563,15 @@ def test_no_query_writes_session_state():
         if rel == "session.py":
             continue
         tree = ast.parse(open(path).read())
-        allowed = [
-            range(node.lineno, node.end_lineno + 1)
-            for node in ast.walk(tree)
-            if isinstance(node, ast.FunctionDef) and (rel, node.name) in _SESSION_WRITERS
-        ]
+
+        def spans(pairs):
+            return [
+                range(node.lineno, node.end_lineno + 1)
+                for node in ast.walk(tree)
+                if isinstance(node, ast.FunctionDef) and (rel, node.name) in pairs
+            ]
+
+        writers, persisters = spans(_SESSION_WRITERS), spans(_PERSISTERS)
         for node in ast.walk(tree):
             name = getattr(node, "attr", None) or getattr(node, "id", None)
             conf_set = (
@@ -558,9 +580,16 @@ def test_no_query_writes_session_state():
                 and getattr(node.value, "attr", None) == "conf"
             )
             if (name in ("createOrReplaceTempView", "register_views") or conf_set) and not any(
-                node.lineno in r for r in allowed
+                node.lineno in r for r in writers
             ):
                 hits.append(f"{rel}:{node.lineno} {name}")
+            persist = (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("persist", "cache")
+            )
+            if persist and not any(node.lineno in r for r in persisters):
+                hits.append(f"{rel}:{node.lineno} {node.func.attr}")
     assert not hits, f"session-state writes outside the allowed writers: {hits}"
 
 

@@ -414,3 +414,24 @@ def test_runs_on_empty_tables(name, spark, sf_dir, empty_sf_dir):
         or (n == 1 and name in _ALLOW_ONE_ROW)
         or n == _ALLOW_SCHEMA_SHAPED.get(name)
     ), (name, n)
+
+
+@pytest.mark.parametrize(
+    "name", ["graph_bfs_part_supplier_hops", "graph_sssp_bounded_minplus"]
+)
+def test_seeded_graph_walk_matches_oracle_on_empty_tables(name, spark, empty_sf_dir):
+    """The walk's seed is min(l_partkey), which is NULL on an empty
+    lineitem: both engines must then return the one (NULL, 0) seed row,
+    not a seed spelled from a driver-side None."""
+    import duckdb
+
+    from .oracle import compare
+
+    with duckdb.connect() as con:
+        for t in TABLES:
+            # the staged tables are Spark output directories, not single files
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM "
+                f"read_parquet('{table_path(empty_sf_dir, t)}/*.parquet')"
+            )
+        assert compare(SPECS[name].fn(spark, empty_sf_dir), con, SPECS[name].oracle) == []

@@ -25,7 +25,13 @@ def _jobs(spark, call):
 
 
 @pytest.mark.parametrize(
-    "name", ["funnel_kaplan_meier_conversion", "graph_pagerank_bounded"]
+    "name",
+    [
+        "funnel_kaplan_meier_conversion",
+        "graph_pagerank_bounded",
+        "graph_closeness_centrality",
+        "graph_harmonic_centrality_bounded",
+    ],
 )
 def test_iterative_query_build_launches_no_jobs(spark, sf_dir, name):
     from severless_data_pipeline_aws_spark.registry import load_all

@@ -240,10 +240,10 @@ def test_kcore_fixpoint_within_unroll(spark, sf_dir):
     the round-4 output has core degree >= k (k-core property), and one
     more peel round changes nothing — so the fixed unroll is the true
     k-core, not a truncation."""
-    from pyspark.sql import functions as F
-
+    from severless_data_pipeline_aws_spark.io import Tables
     from severless_data_pipeline_aws_spark.operators.graphs import (
         _KCORE_K,
+        _co_pairs,
         graph_kcore_decomposition,
     )
 
@@ -256,19 +256,7 @@ def test_kcore_fixpoint_within_unroll(spark, sf_dir):
     # stopped early, some output node would still count edges to a
     # node that a further round peels, and its induced degree would
     # come out smaller than core_degree.
-    from severless_data_pipeline_aws_spark.io import Tables
-
-    t = Tables(spark, sf_dir)
-    base = (
-        t.orders.filter(F.col("o_totalprice") > 450000)
-        .join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(t.lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .selectExpr("CAST(c_nationkey AS BIGINT) a", "CAST(s_nationkey AS BIGINT) b")
-        .distinct()
-        .collect()
-    )
+    base = _co_pairs(Tables(spark, sf_dir), 450000).collect()
     survivors = {n for n, _ in rows}
     und = {(r["a"], r["b"]) for r in base} | {(r["b"], r["a"]) for r in base}
     induced = {}

@@ -17,49 +17,36 @@ def _df(name, spark, sf_dir):
 
 
 def test_closeness_bfs_fixpoint(spark, sf_dir):
-    """graph_closeness_centrality unrolls 6 BFS rounds; its docstring
-    claims the fixpoint is reached inside the unroll. Verify: a 7th
-    relaxation round claims no new (root, node) pair — i.e. every
-    reachable pair is already at its true shortest distance."""
+    """graph_closeness_centrality unrolls 6 BFS expansions; its docstring
+    claims the fixpoint is reached inside the unroll. Verify: the shared
+    hop table equals an UNBOUNDED breadth-first search over the collected
+    edge list — every reachable (root, node) pair is present, at its true
+    shortest distance."""
+    from collections import deque
+
     from severless_data_pipeline_aws_spark.operators import graphs as G
 
     t = Tables(spark, sf_dir)
-    co = (
-        t.orders.filter(F.col("o_totalprice") > 400000)
-        .join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(t.lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .select(F.col("c_nationkey").alias("a"), F.col("s_nationkey").alias("b"))
-        .distinct()
-    )
-    sym = (
-        co.selectExpr("a AS src", "b AS dst")
-        .union(co.selectExpr("b AS src", "a AS dst"))
-        .distinct()
-        .persist()
-    )
-    nodes = sym.select(F.col("src").alias("node")).distinct()
-    visited = nodes.select(F.col("node").alias("root"), "node")
-    frontier = visited
-    for _ in range(G._CLOSENESS_ROUNDS):
-        nxt = (
-            frontier.join(sym, frontier["node"] == sym["src"])
-            .select("root", F.col("dst").alias("node"))
-            .distinct()
-            .join(visited, ["root", "node"], "left_anti")
-            .persist()
-        )
-        visited = visited.union(nxt).persist()
-        frontier = nxt
-    extra = (
-        frontier.join(sym, frontier["node"] == sym["src"])
-        .select("root", F.col("dst").alias("node"))
-        .distinct()
-        .join(visited, ["root", "node"], "left_anti")
-        .count()
-    )
-    assert extra == 0, f"BFS not converged within {G._CLOSENESS_ROUNDS} rounds"
+    adj = {}
+    for r in G._co_pairs(t, 400000).collect():
+        adj.setdefault(r["a"], set()).add(r["b"])
+        adj.setdefault(r["b"], set()).add(r["a"])
+    want = set()
+    for root in adj:
+        dist, todo = {root: 0}, deque([root])
+        while todo:
+            u = todo.popleft()
+            for v in adj[u]:
+                if v not in dist:
+                    dist[v] = dist[u] + 1
+                    todo.append(v)
+        want |= {(root, v, d) for v, d in dist.items()}
+    rows = G._nation_hops(t).collect()
+    got = {(r["root"], r["node"], r["dist"]) for r in rows}
+    assert want, "empty co-trade graph at test SF"
+    assert len(rows) == len(got)
+    assert got == want, f"BFS not converged within {G._CLOSENESS_ROUNDS} rounds"
+    assert {r["n_nodes"] for r in rows} == {len(adj)}
 
 
 def test_closeness_bounds(spark, sf_dir):
@@ -199,15 +186,10 @@ def test_lpa_period_two_dynamics(spark, sf_dir):
     would falsify the docstring's dynamics claim."""
     from pyspark.sql import Window as W
 
-    t = Tables(spark, sf_dir)
-    co = (
-        t.orders.filter(F.col("o_totalprice") > 400000)
-        .join(t.customer, F.col("o_custkey") == F.col("c_custkey"))
-        .join(t.lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t.supplier, F.col("l_suppkey") == F.col("s_suppkey"))
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .selectExpr("CAST(c_nationkey AS BIGINT) AS a", "CAST(s_nationkey AS BIGINT) AS b")
-        .distinct()
+    from severless_data_pipeline_aws_spark.operators.graphs import _co_pairs
+
+    co = _co_pairs(Tables(spark, sf_dir), 400000).selectExpr(
+        "CAST(a AS BIGINT) AS a", "CAST(b AS BIGINT) AS b"
     )
     sym = (
         co.selectExpr("a AS src", "b AS dst")

@@ -4,7 +4,9 @@ share one session across threads.
 Intermediates are bound as ``spark.sql`` DataFrame arguments (PySpark
 drops the views it names for them once the query is analyzed) and
 streaming replays run in a child session, so no query registers a view
-or changes a conf on the caller's session.
+or changes a conf on the caller's session. Multi-job intermediates are
+checkpointed rather than persisted, so no query leaves blocks in the
+cache manager that every session of the application shares.
 """
 
 from __future__ import annotations
@@ -31,15 +33,20 @@ _CONFS = ("spark.sql.shuffle.partitions", "spark.sql.sources.partitionOverwriteM
         "sql_api_revenue_by_nation",  # registered every table as a view
         "agg_grouping_sets",  # registered three prefixed table views
         "streaming_tumbling_window_agg",  # memory sink + partition clamp
+        "graph_hits_hubs_authorities",  # persisted its edge list and nodes
+        "graph_closeness_centrality",  # persisted every BFS round
     ],
 )
 def test_query_leaves_no_session_state(name, spark, sf_dir):
     # a fresh session has no temp views, so any left behind is this query's
     session = spark.newSession()
     confs = {k: session.conf.get(k) for k in _CONFS}
+    # the cache manager is shared by every session of the application
+    session.catalog.clearCache()
     assert SPECS[name].fn(session, sf_dir).count() > 0
     assert [t.name for t in session.catalog.listTables()] == []
     assert {k: session.conf.get(k) for k in _CONFS} == confs
+    assert session._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 #: 8 distinct queries for one session: two streaming replays, four that
