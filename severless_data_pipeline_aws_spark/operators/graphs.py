@@ -11,10 +11,11 @@ partitioning; the visited set stays bucketed by node.
 
 Nothing here is persisted: an intermediate that more than one job
 reads is checkpointed eagerly (``materialize()`` for part-supplier
-frames, which grow with lineitem; plain ``localCheckpoint`` for the
-<= 25-node nation graph), so a query leaves no blocks in the
-session-shared cache. Every nation co-trade query starts from one
-edge builder, ``_co_pairs``.
+frames, which grow with lineitem; one plain ``localCheckpoint`` for
+the nation edge list of ``_co_edges``), so a query leaves no blocks in
+the session-shared cache. Every nation co-trade query starts from the
+pairs of ``_co_pairs``; the iterative ones fold their rounds over the
+<= 25-node graph that ``_nation_graph`` gathers into one row.
 
 Reference parity: the reference has no graph operators — this extends
 the engine for supply-chain-reach / contamination-radius questions a
@@ -70,6 +71,28 @@ def _co_edges(t: Tables):
         .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
     )
     return e, deg
+
+
+def _nation_graph(t: Tables, min_price: int) -> DataFrame:
+    """The ``_co_pairs`` graph gathered into one row, in the nation keys'
+    own int type: ``e`` the directed (a, b) pairs sorted, ``vs`` the
+    sorted node list, ``adj`` the symmetric neighbor map (sorted lists).
+    The graph has at most 25 nodes, so the iterative nation queries fold
+    their rounds over this row with ``aggregate()`` in one lazy plan. On
+    an empty graph both arrays are empty and a fold explodes to no rows."""
+    graph = _co_pairs(t, min_price).agg(
+        F.array_sort(F.collect_list(F.struct("a", "b"))).alias("e"),
+        F.array_sort(F.array_union(F.collect_set("a"), F.collect_set("b"))).alias("vs"),
+    )
+    return graph.select(
+        "e",
+        "vs",
+        F.expr(
+            """map_from_arrays(vs, transform(vs, v -> array_sort(array_union(
+                transform(filter(e, x -> x.a = v), x -> x.b),
+                transform(filter(e, x -> x.b = v), x -> x.a)))))"""
+        ).alias("adj"),
+    )
 
 
 _MAX_HOPS = 3
@@ -193,14 +216,13 @@ def _seed(li: DataFrame, dist: str) -> DataFrame:
 )
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     e, _deg = _co_edges(Tables(spark, sf_dir))
-    n_edges = e.count()  # scalar for the report column (edge list is tiny)
     e1 = e.select(F.col("u").alias("x"), F.col("v").alias("y"))
     e2 = e.select(F.col("u").alias("y"), F.col("v").alias("z"))
     e3 = e.select(F.col("u").alias("x"), F.col("v").alias("z"))
     tri = e1.join(e2, "y").join(e3, ["x", "z"])
     return tri.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_triangles"),
-        F.lit(n_edges).cast("bigint").alias("n_edges"),
+        e.select(F.count(F.lit(1)).cast("bigint")).scalar().alias("n_edges"),
     )
 
 
@@ -352,15 +374,7 @@ _PR_STEP_SQL = """
     tags=("graph", "join", "iterative"),
 )
 def graph_pagerank_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    co = _co_pairs(Tables(spark, sf_dir), 400000).selectExpr(
-        "CAST(a AS BIGINT) AS a", "CAST(b AS BIGINT) AS b"
-    )
-    graph = co.agg(
-        F.array_sort(F.collect_list(F.struct("a", "b"))).alias("e"),
-        F.array_sort(
-            F.array_union(F.collect_set("a"), F.collect_set("b"))
-        ).alias("vs"),
-    ).select(
+    graph = _nation_graph(Tables(spark, sf_dir), 400000).select(
         "e",
         "vs",
         F.expr(
@@ -383,8 +397,8 @@ def graph_pagerank_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # explode the node list, not the rank map: Spark infers a non-empty
     # filter on a generator's input, which would run the fold twice
-    return ranks.select(F.explode("vs").alias("nationkey"), "r").select(
-        "nationkey", F.col("r")[F.col("nationkey")].alias("pagerank")
+    return ranks.select(F.explode("vs").alias("v"), "r").select(
+        F.col("v").cast("bigint").alias("nationkey"), F.col("r")[F.col("v")].alias("pagerank")
     )
 
 
@@ -622,12 +636,20 @@ def graph_link_prediction_common_neighbors(spark: SparkSession, sf_dir: str) -> 
 
 _HITS_ITERS = 2
 
-#: one ordered-fold group sum: contributions fold in neighbor order so
-#: the double sum is bit-identical to the oracle's list_reduce
-_HITS_FOLD = (
-    "aggregate(transform(array_sort(collect_list(struct({key}, c))), "
-    "p -> p.c), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-)
+
+def _hits_half(prev: str, inn: str, out: str) -> str:
+    """One HITS half-step as SQL: each node folds ``prev`` over its edges
+    with x.<out> = v in neighbor order (``e`` is sorted), then the scores
+    are divided by their total, folded in node order; a node with no such
+    edge adds 0.0, which keeps the sums bit-identical to the oracle's.
+    ``transform(array(raw), m -> ...)[0]`` evaluates the raw map once."""
+    return f"""transform(
+        array(map_from_arrays(vs, transform(vs, v -> aggregate(
+            filter(e, x -> x.{out} = v), CAST(0.0 AS DOUBLE),
+            (acc, x) -> acc + {prev}[x.{inn}])))),
+        m -> transform_values(m, (k, x) -> x / aggregate(
+            map_values(m), CAST(0.0 AS DOUBLE), (acc, y) -> acc + y)))[0]"""
+
 
 #: one HITS half-step as a DuckDB CTE pair: raw = ordered fold of the
 #: opposite score over {join_col}, then L1 normalization by the
@@ -689,71 +711,39 @@ _HITS_NORM_SQL = """
         "normalized (sum-normalization instead of the textbook L2 — "
         "same fixpoint direction, and it keeps every operation "
         "+,/ on doubles so the oracle can be bit-exact; sqrt-free). "
-        "Per-node sums fold in neighbor order (array_sort(collect_"
-        "list) + sequential aggregate == the oracle's ordered "
+        "Per-node sums fold in neighbor order (filter over the sorted "
+        "edge list + sequential aggregate == the oracle's ordered "
         "list_reduce) and the normalizing constant folds in node "
         "order, so all four rounds are hash-exact, not just close. "
-        "The edge list and node set are checkpointed once; every "
-        "half-step joins against them (the hash-partitioned edge index "
-        "of any Pregel round). Each normalization broadcasts a one-row "
-        "scalar (whitelisted BNLJ). The nation graph is metadata-"
-        "scale; on a billion-node graph the identical loop runs with "
+        "The <= 25-node graph is gathered into one row and the "
+        f"{2 * _HITS_ITERS} alternating half-steps fold over an "
+        "(authority, hub) pair of score maps with aggregate(), in one "
+        "lazy plan with no per-round jobs; an empty graph has no nodes "
+        "and explodes to no rows, so no total is ever divided by. On a "
+        "billion-node graph each half-step becomes scores ⋈ edges with "
         "the edge list bucketed by node and plain sums (order-pinning "
         "is an oracle-exactness device, not an algorithmic need)."
     ),
     tags=("graph", "join", "iterative"),
 )
 def graph_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    co = (
-        _co_pairs(Tables(spark, sf_dir), 400000)
-        .selectExpr("CAST(a AS BIGINT) AS a", "CAST(b AS BIGINT) AS b")
-        .localCheckpoint(eager=True)
+    scores = _nation_graph(Tables(spark, sf_dir), 400000).select(
+        "vs",
+        F.expr(
+            f"""aggregate(
+                sequence(1, {2 * _HITS_ITERS}),
+                named_struct(
+                    'a', map_from_arrays(vs, transform(vs, v -> CAST(1.0 AS DOUBLE))),
+                    'h', map_from_arrays(vs, transform(vs, v -> CAST(1.0 AS DOUBLE)))),
+                (s, i) -> IF(i % 2 = 1,
+                    named_struct('a', {_hits_half("s.h", "a", "b")}, 'h', s.h),
+                    named_struct('a', s.a, 'h', {_hits_half("s.a", "b", "a")})))"""
+        ).alias("s"),
     )
-    nodes = (
-        co.select(F.col("a").alias("v"))
-        .union(co.select(F.col("b").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    if nodes.rdd.isEmpty():
-        return spark.createDataFrame(
-            [], "nationkey bigint, authority double, hub double"
-        )
-
-    def half_step(prev: DataFrame, inn: str, out: str) -> DataFrame:
-        """prev(v, s) -> normalized opposite score over co[inn]->co[out]."""
-        raw = (
-            co.join(prev, co[inn] == prev["v"])
-            .select(F.col(out).alias("dst"), F.col(inn).alias("src"), F.col("s").alias("c"))
-            .groupBy("dst")
-            .agg(F.expr(_HITS_FOLD.format(key="src")).alias("s"))
-        )
-        tot = raw.select(F.col("dst").alias("v"), "s").agg(
-            F.expr(
-                "aggregate(transform(array_sort(collect_list(struct(v, s))), "
-                "p -> p.s), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-            ).alias("tot")
-        )
-        return (
-            nodes.join(raw, nodes["v"] == raw["dst"], "left")
-            .crossJoin(F.broadcast(tot))
-            .select(
-                "v",
-                F.expr(
-                    "coalesce(s, CAST(0.0 AS DOUBLE)) / tot"
-                ).alias("s"),
-            )
-            .localCheckpoint(eager=True)
-        )
-
-    score = nodes.select("v", F.lit(1.0).cast("double").alias("s"))
-    for _ in range(_HITS_ITERS):
-        auth = half_step(score, "a", "b")
-        score = half_step(auth, "b", "a")
-    return (
-        nodes.join(auth.withColumnRenamed("s", "authority"), "v")
-        .join(score.withColumnRenamed("s", "hub"), "v")
-        .select(F.col("v").alias("nationkey"), "authority", "hub")
+    return scores.select(F.explode("vs").alias("v"), "s").select(
+        F.col("v").cast("bigint").alias("nationkey"),
+        F.col("s.a")[F.col("v")].alias("authority"),
+        F.col("s.h")[F.col("v")].alias("hub"),
     )
 
 
@@ -824,39 +814,33 @@ _KCORE_EDGE_SQL = """
         "fixpoint within the unroll at the test SFs, so the fixed "
         "unroll IS the converged k-core, not an approximation. All "
         "arithmetic is integer degree counting — hash-exact with no "
-        "float anywhere. Each Spark round re-derives degrees from the "
-        "checkpointed current edge set and localCheckpoints the "
-        "survivors, the Pregel peel; on a billion-node graph the same "
-        "loop runs with edges bucketed by endpoint (two shuffles per "
-        "round) and the round "
-        "count bounded by the graph's degeneracy ordering depth."
+        "float anywhere. Spark gathers the <= 25-node graph into one "
+        "row and folds the peel rounds over its neighbor map with "
+        "aggregate(): a node keeps a neighbor only while both have at "
+        "least k neighbors, all in one lazy plan with no per-round "
+        "jobs. On a billion-node graph each round is a degree count "
+        "and two semi-joins with edges bucketed by endpoint (two "
+        "shuffles per round), and the round count is bounded by the "
+        "graph's degeneracy ordering depth."
     ),
     tags=("graph", "join", "iterative"),
 )
 def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _co_pairs(Tables(spark, sf_dir), 450000).selectExpr(
-        "CAST(a AS BIGINT) AS a", "CAST(b AS BIGINT) AS b"
+    core = _nation_graph(Tables(spark, sf_dir), 450000).select(
+        "vs",
+        F.expr(
+            f"""aggregate(sequence(1, {_KCORE_ROUNDS}), adj,
+                (m, i) -> transform_values(m, (v, ns) -> filter(ns,
+                    w -> size(ns) >= {_KCORE_K} AND size(m[w]) >= {_KCORE_K})))"""
+        ).alias("m"),
     )
-    g = (
-        base.selectExpr("a AS u", "b AS v")
-        .union(base.selectExpr("b AS u", "a AS v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(_KCORE_ROUNDS):
-        deg = g.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-        keep = deg.filter(F.col("deg") >= _KCORE_K).select("u")
-        g = (
-            g.join(keep, "u")
-            .join(keep.withColumnRenamed("u", "v"), "v")
-            .select("u", "v")
-            .localCheckpoint(eager=True)
-        )
     return (
-        g.groupBy("u")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("core_degree"))
+        core.select(F.explode("vs").alias("v"), "m")
+        .select(
+            F.col("v").cast("bigint").alias("nationkey"),
+            F.size(F.col("m")[F.col("v")]).cast("bigint").alias("core_degree"),
+        )
         .filter(F.col("core_degree") >= _KCORE_K)
-        .select(F.col("u").alias("nationkey"), "core_degree")
     )
 
 
@@ -876,22 +860,12 @@ def _nation_hops(t: Tables) -> DataFrame:
     """(root, node, dist, n_nodes): hop distance from every node of the
     undirected high-value co-trade graph to each node it reaches within
     ``_CLOSENESS_ROUNDS`` hops (root itself at 0), plus the graph's node
-    count. One lazy plan: the <= 25-node graph is gathered into one row
-    (sorted node list + adjacency map), the roots are exploded, and each
-    root folds its reachable-set layers L0 = {root}, L(i) = L(i-1) plus
-    the neighbors of L(i-1). A node's hop count is the number of layers
-    that do not contain it; a node no layer contains is unreachable."""
-    co = _co_pairs(t, 400000)
-    graph = (
-        co.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .union(co.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .groupBy("src")
-        .agg(F.collect_set("dst").alias("nbrs"))
-        .agg(
-            F.array_sort(F.collect_list("src")).alias("vs"),
-            F.map_from_entries(F.collect_list(F.struct("src", "nbrs"))).alias("adj"),
-        )
-    )
+    count. One lazy plan over ``_nation_graph``'s row: the roots are
+    exploded, and each root folds its reachable-set layers L0 = {root},
+    L(i) = L(i-1) plus the neighbors of L(i-1). A node's hop count is the
+    number of layers that do not contain it; a node no layer contains is
+    unreachable."""
+    graph = _nation_graph(t, 400000)
     layers = graph.select(F.explode("vs").alias("root"), "vs", "adj").select(
         "root",
         "vs",
@@ -1043,12 +1017,14 @@ _LPA_STEP_SQL = """
         "near-linear-time community algorithm (Raghavan et al.) that "
         "needs no modularity objective or cluster count. The "
         "deterministic tie-break makes synchronous LPA a pure integer "
-        "fixpoint — each Spark round is one edges-to-labels equi-join "
-        "+ per-(node,label) count + a row_number pick, the identical "
-        "plan at any graph size (on a billion-node graph: edge list "
-        "hash-partitioned by dst once, every round reuses it; "
-        "localCheckpoint cuts lineage like connected components). "
-        "Rounds are unrolled in the oracle as chained CTEs; all "
+        "fixpoint. Spark gathers the <= 25-node graph into one row "
+        "and folds the rounds over a label map with aggregate(), in "
+        "one lazy plan with no per-round jobs: each node takes the "
+        "minimum of (-count, label) over its neighbors' distinct "
+        "labels. On a billion-node graph each round is one "
+        "edges-to-labels equi-join + per-(node,label) count + a "
+        "row_number pick, with the edge list hash-partitioned by dst "
+        "once. Rounds are unrolled in the oracle as chained CTEs; all "
         "quantities are integers, so the hash match is exact. The "
         "round count is a deliberate CAP, not a convergence claim: "
         "synchronous LPA can 2-cycle on dense graphs (this one does — "
@@ -1060,34 +1036,19 @@ _LPA_STEP_SQL = """
     tags=("graph", "join", "iterative"),
 )
 def graph_label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    co = _co_pairs(Tables(spark, sf_dir), 400000).selectExpr(
-        "CAST(a AS BIGINT) AS a", "CAST(b AS BIGINT) AS b"
+    labels = _nation_graph(Tables(spark, sf_dir), 400000).select(
+        "vs",
+        F.expr(
+            f"""aggregate(sequence(1, {_LPA_ROUNDS}), map_from_arrays(vs, vs),
+                (l, i) -> map_from_arrays(vs, transform(vs, v -> array_min(transform(
+                    array_distinct(transform(adj[v], w -> l[w])),
+                    c -> named_struct('n', -size(filter(adj[v], w -> l[w] = c)), 'c', c))).c)))"""
+        ).alias("l"),
     )
-    sym = (
-        co.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .union(co.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    return labels.select(F.explode("vs").alias("v"), "l").select(
+        F.col("v").cast("bigint").alias("nationkey"),
+        F.col("l")[F.col("v")].cast("bigint").alias("community"),
     )
-    labels = sym.select(F.col("src").alias("v")).distinct().select(
-        "v", F.col("v").alias("lbl")
-    )
-    w = W.partitionBy("v").orderBy(F.desc("c"), F.asc("lbl"))
-    for _ in range(_LPA_ROUNDS):
-        votes = (
-            sym.join(labels.withColumnRenamed("v", "dst"), "dst")
-            .groupBy(F.col("src").alias("v"), "lbl")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        labels = (
-            votes.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("v", "lbl")
-            .localCheckpoint(eager=False)
-        )
-    return labels.select(F.col("v").alias("nationkey"), F.col("lbl").alias("community"))
 
 
 _RA_TOP = 25
@@ -2258,52 +2219,46 @@ def _truss_round_sql(i: int) -> str:
         "standard community-core primitive (stricter than k-core: "
         "every retained relationship is embedded in many closed "
         f"triads). {_TRUSS_ROUNDS} peel rounds unroll IDENTICALLY in "
-        "both engines (each round: the ordered common-neighbor "
-        "3-join for per-edge support, then two-sided restriction); "
+        "both engines (each round: per-edge triangle support within "
+        "the current edge set, then restriction to support >= k-2); "
         "the fixpoint-within-unroll property is asserted by pytest "
         "at the test SFs (the k-core contract), AND every output row "
         "carries a converged flag (last-round edge count == final "
         "filtered count) so a non-converged truncation on some other "
         "corpus is visible in the output itself, not only in a test "
-        "(r10 advice). Integer triangle counting end to end. Each "
-        "Spark round localCheckpoints the <=625-row edge set "
-        "(metadata-scale); on a real graph this is the standard "
+        "(r10 advice). Integer triangle counting end to end. Spark "
+        "folds the peel over the sorted u < v edge array of the "
+        "gathered graph row (support = common neighbors within the "
+        "current array), flag included, in one lazy plan with no "
+        "per-round jobs; on a real graph this is the standard "
         "support-peel with edges bucketed by endpoint, round count "
         "bounded by the truss peeling depth."
     ),
     tags=("graph", "join", "iterative"),
 )
 def graph_ktruss_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = Tables(spark, sf_dir)
-    g, _deg = _co_edges(t)
+    def nbrs(n: str) -> str:
+        return f"transform(filter(g, y -> y.u = {n} OR y.v = {n}), y -> IF(y.u = {n}, y.v, y.u))"
 
-    def support(edges: DataFrame) -> DataFrame:
-        sym = edges.selectExpr("u AS a", "v AS x").union(
-            edges.selectExpr("v AS a", "u AS x")
-        )
-        tri = edges.join(sym.selectExpr("a AS u", "x"), "u").join(
-            sym.selectExpr("a AS v", "x"), ["v", "x"]
-        )
-        return tri.groupBy("u", "v").agg(
-            F.count(F.lit(1)).cast("bigint").alias("sup")
-        )
-
-    for _ in range(_TRUSS_ROUNDS - 1):
-        keep = support(g).filter(F.col("sup") >= _TRUSS_K - 2).select("u", "v")
-        g = g.join(keep, ["u", "v"]).localCheckpoint(eager=True)
-    final = support(g).filter(F.col("sup") >= _TRUSS_K - 2).localCheckpoint(
-        eager=True
-    )
-    # convergence is visible in the output (r10 advice): the unroll is a
-    # true truss iff the final filter removed nothing from the last
-    # round's edge set. One-row broadcast scalar, the whitelisted shape.
-    flag = F.broadcast(
-        g.agg(F.count(F.lit(1)).alias("n_before")).crossJoin(
-            final.agg(F.count(F.lit(1)).alias("n_after"))
-        ).select((F.col("n_before") == F.col("n_after")).alias("converged"))
+    sup = f"CAST(size(array_intersect({nbrs('x.u')}, {nbrs('x.v')})) AS BIGINT)"
+    # the finish step keeps the last round's edge count next to the
+    # final filter: the unroll is a true truss iff that filter removed
+    # nothing, so convergence is visible in the output (r10 advice)
+    peeled = _nation_graph(Tables(spark, sf_dir), 400000).select(
+        F.expr(
+            f"""aggregate(sequence(1, {_TRUSS_ROUNDS - 1}),
+                array_sort(array_distinct(transform(e, x ->
+                    named_struct('u', least(x.a, x.b), 'v', greatest(x.a, x.b))))),
+                (g, i) -> filter(g, x -> {sup} >= {_TRUSS_K - 2}),
+                g -> named_struct('n', size(g), 'fin', filter(
+                    transform(g, x -> named_struct('u', x.u, 'v', x.v, 'sup', {sup})),
+                    x -> x.sup >= {_TRUSS_K - 2})))"""
+        ).alias("t")
     )
     return (
-        final.select("u", "v", F.col("sup").alias("truss_support"))
-        .crossJoin(flag)
+        peeled.select(
+            F.explode("t.fin").alias("x"), (F.col("t.n") == F.size("t.fin")).alias("converged")
+        )
+        .select("x.u", "x.v", F.col("x.sup").alias("truss_support"), "converged")
         .orderBy("u", "v")
     )

@@ -20,7 +20,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _host_driver_memory() -> str:
+    """Half of the host's physical memory, capped at 48g, in megabytes."""
+    half = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2
+    return f"{min(half, 48 << 30) >> 20}m"
 
 
 def get_spark(
@@ -31,9 +35,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the configured SparkSession.
 
-    ``cpus`` controls ``local[N]``; defaults to $SPARK_GRAFT_CPUS (32).
+    ``cpus`` controls ``local[N]``; defaults to $SPARK_GRAFT_CPUS, else
+    the cores this process may run on. The driver memory is
+    $SPARK_GRAFT_DRIVER_MEM, else half the host's memory (at most 48g).
     """
-    n = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    n = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     sp = shuffle_partitions or n
     builder = (
         SparkSession.builder.master(f"local[{n}]")
@@ -44,7 +50,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _host_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config(
             "spark.sql.warehouse.dir",

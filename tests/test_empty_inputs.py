@@ -417,12 +417,23 @@ def test_runs_on_empty_tables(name, spark, sf_dir, empty_sf_dir):
 
 
 @pytest.mark.parametrize(
-    "name", ["graph_bfs_part_supplier_hops", "graph_sssp_bounded_minplus"]
+    "name",
+    [
+        "graph_bfs_part_supplier_hops",
+        "graph_sssp_bounded_minplus",
+        "graph_hits_hubs_authorities",
+        "graph_kcore_decomposition",
+        "graph_label_propagation_communities",
+        "graph_ktruss_decomposition",
+    ],
 )
 def test_seeded_graph_walk_matches_oracle_on_empty_tables(name, spark, empty_sf_dir):
-    """The walk's seed is min(l_partkey), which is NULL on an empty
-    lineitem: both engines must then return the one (NULL, 0) seed row,
-    not a seed spelled from a driver-side None."""
+    """Graph walks and folds on empty tables match the oracle. The BFS
+    and SSSP seed is min(l_partkey), which is NULL on an empty lineitem:
+    both engines must then return the one (NULL, 0) seed row, not a seed
+    spelled from a driver-side None. The nation-graph folds (HITS,
+    k-core, label propagation, k-truss) gather an empty graph row and
+    must explode it to no rows, with no division by a zero total."""
     import duckdb
 
     from .oracle import compare

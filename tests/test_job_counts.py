@@ -31,6 +31,10 @@ def _jobs(spark, call):
         "graph_pagerank_bounded",
         "graph_closeness_centrality",
         "graph_harmonic_centrality_bounded",
+        "graph_hits_hubs_authorities",
+        "graph_kcore_decomposition",
+        "graph_label_propagation_communities",
+        "graph_ktruss_decomposition",
     ],
 )
 def test_iterative_query_build_launches_no_jobs(spark, sf_dir, name):

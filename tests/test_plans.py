@@ -730,9 +730,8 @@ _BNLJ_BOUNDED_OK = {
     "timeseries_dow_seasonal_index", "tpch_q11_important_part_value",
     "tpch_q22_dormant_customers", "stats_theil_sen_daily_trend",
     "iot_flatten_wide", "iot_generated_readings",
-    # (graph_hits_hubs_authorities broadcasts one-row normalization
-    # scalars too, but each half-step localCheckpoints eagerly, so the
-    # final plan shows only checkpoint scans — no BNLJ to whitelist)
+    # (graph_hits_hubs_authorities folds its normalizations inside one
+    # gathered graph row: one plan with no BNLJ to whitelist)
     "stats_hodges_lehmann_shift",
     "join_bloom_prefilter_semireduction", "similarity_silhouette_centroid",
     "stats_friedman_test", "stats_grubbs_max_outlier",
@@ -849,10 +848,6 @@ _BNLJ_BOUNDED_OK = {
     # runs via localCheckpoint, so the final eval plan is |Q| x k
     # equi-joins only; the cascades' own BNLJs are still gated through
     # their own registered plans, which remain listed here)
-    # r11 (r10 advice): one-row converged-flag broadcast (edge-count
-    # before == after the final truss filter) over the checkpointed
-    # <=625-row final edge set
-    "graph_ktruss_decomposition",
     # r11: the 5-row robots.txt rule literal broadcast into the
     # regexp-match scan (bounded parameter table — robots files are
     # crawl-config-bounded at any corpus scale)
