@@ -25,7 +25,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..io import Tables
@@ -49,11 +49,13 @@ def _pair_docs(t: Tables):
 
     r12: spread() so the shingle/signature explodes downstream of every
     pair-tier query parallelize even on the single-row-group local
-    layout (no-op on well-split production layouts)."""
-    n = t.documents.count()  # scalar query parameter (metadata-scale)
-    return spread(
-        t.documents.filter(F.col("doc_id") <= max(_PAIR_SUBSET, n // 2))
-    )
+    layout (no-op on well-split production layouts). The corpus size is
+    an in-plan scalar subquery, so building the subset launches no job;
+    spread() runs on the scan before the filter, so its partition count
+    never plans the subquery."""
+    n = t.documents.select(F.count(F.lit(1))).scalar()
+    bound = F.greatest(F.lit(_PAIR_SUBSET), F.shiftright(n, 1))  # n DIV 2
+    return spread(t.documents).filter(F.col("doc_id") <= bound)
 
 #: DuckDB twin of ``_shingles()`` over the ``_PAIR_SUBSET`` docs — the
 #: ONE place the oracle-side 3-gram definition lives (interpolated into
@@ -704,78 +706,67 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-def _min_label_hop(edges: DataFrame, comps: DataFrame) -> DataFrame:
-    """One neighbor-min propagation step: comps(doc_id, component) ->
-    same schema with component := min(component, min over neighbors).
-    ``edges`` carries a self-loop per node, so the one join reads both
-    the node's own label and its neighbors' (comps ∪ (edges ⋈ comps))
-    and comps appears once in the plan."""
-    return (
-        edges.join(comps, edges["dst"] == comps["doc_id"])
-        .groupBy(F.col("src").alias("doc_id"))
-        .agg(F.min("component").alias("component"))
-    )
-
-
-def _pointer_jump(comps: DataFrame) -> DataFrame:
-    """component := component of my component, as one window instead of
-    a self-join. Each node u lands in partition comp(u) (it asks for
-    that node's label) and in partition u (it answers with its own).
-    Partition k then holds comp(k) and copies of k itself; since
-    comp(k) <= k, their min is comp(k), the answer every asker takes."""
-    ask = F.struct(
-        F.col("component").alias("k"), F.col("doc_id").alias("u"), "component"
-    )
-    answer = F.struct(F.col("doc_id").alias("k"), F.lit(None).alias("u"), "component")
-    rows = comps.select(F.explode(F.array(ask, answer)).alias("r")).select("r.*")
-    return rows.select(
-        F.col("u").alias("doc_id"),
-        F.min("component").over(W.partitionBy("k")).alias("component"),
-    ).filter(F.col("doc_id").isNotNull())
+def _both_ways(pairs: DataFrame, a: str, b: str) -> DataFrame:
+    """Both directions (src, dst) of every (a, b) pair, reading ``pairs`` once."""
+    both = f"array(struct({a} AS src, {b} AS dst), struct({b} AS src, {a} AS dst))"
+    return pairs.select(F.inline(F.expr(both)))
 
 
 def min_label_components(edges: DataFrame) -> DataFrame:
-    """Iterative min-label propagation over a symmetric edge list
-    (columns ``src``, ``dst``) -> one row per node: (doc_id, component).
+    """Min-label propagation over a symmetric edge list of non-null ids
+    (columns ``src``, ``dst``) -> one row per node: (doc_id, component =
+    min node id of its component), as one lazy plan.
 
-    Each cycle batches TWO neighbor hops plus one pointer jump
-    (component := component of my component — valid because every
-    label is a node id in the same component, and monotone since
-    comp(u) <= u), then materializes the labels with one checkpoint,
-    so lineage stays bounded. Convergence rides that checkpoint job: an
-    Observation records the decimal sum of the labels, and because
-    labels only decrease, an unchanged sum means no label changed — no
-    comparison join and no count job. Each hop reads the labels through
-    one join and the pointer jump is a window, not a self-join, so no
-    part of a cycle's plan is computed twice. Shared by the
-    shingle-graph and semantic (embedding-cosine) cluster queries."""
-    edges = edges.filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    nodes = edges.select(F.col("src").alias("doc_id")).distinct()
-    # checkpointed after a not-null filter, the ids are non-nullable: no
-    # join in the loop infers a filter that would tell two scans of it apart
-    edges = edges.union(nodes.select("doc_id", "doc_id")).localCheckpoint(
-        eager=True
+    The adjacency is gathered into one row (``adj``: node -> neighbor
+    list) and the labels fold over it with ``aggregate()``: each step
+    sets every label to the min of itself, its label's label (a pointer
+    jump — valid because every label is a node id in the same
+    component) and its neighbors' labels. Labels reach the component
+    minimum within the graph's diameter (at most n - 1 steps, the fold's
+    length), and once a step changes nothing the rest are no-ops. The
+    row holds the candidate graph, not the corpus; at trillion-edge
+    scale :func:`star_components` is the distributed strategy. Shared by
+    the shingle-graph and semantic (embedding-cosine) cluster queries."""
+    adj = (
+        edges.groupBy("src")
+        .agg(F.collect_list("dst").alias("ns"))
+        .agg(F.map_from_entries(F.collect_list(F.struct("src", "ns"))).alias("adj"))
     )
-    # the self-loops are the initial labels; read from the checkpoint,
-    # since `nodes` would recompute the input edges
-    comps = edges.filter("src = dst").select(
-        F.col("src").alias("doc_id"), F.col("dst").alias("component")
+    labels = adj.select(
+        "adj",
+        F.expr(
+            """aggregate(sequence(1, size(adj)),
+                named_struct('prev', filter(map_keys(adj), v -> false),
+                             'm', map_from_arrays(map_keys(adj), map_keys(adj))),
+                (acc, i) -> IF(acc.prev = map_values(acc.m), acc, named_struct(
+                    'prev', map_values(acc.m),
+                    'm', transform_values(acc.m, (v, l) -> least(
+                        l, acc.m[l], array_min(transform(adj[v], w -> acc.m[w]))))))).m"""
+        ).alias("m")
     )
-    last = None  # label sum after the previous cycle
-    for cycle in range(20):  # cycle bound; covers diameter ~2^20 via jumps
-        obs = Observation()
-        comps = (
-            _pointer_jump(_min_label_hop(edges, _min_label_hop(edges, comps)))
-            .observe(
-                obs, F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-            )
-            .localCheckpoint(eager=True)
-        )
-        total = obs.get["s"]
-        if cycle and total == last:
-            break
-        last = total
-    return comps
+    # explode the node list, not the fold: the non-empty filter Spark
+    # infers on a generator's input would otherwise copy the fold
+    return labels.select(F.explode(F.map_keys("adj")).alias("doc_id"), "m").select(
+        "doc_id", F.col("m")[F.col("doc_id")].alias("component")
+    )
+
+
+def _shingle_pairs(t: Tables) -> DataFrame:
+    """The near-dup candidate graph of the pair-tier docs as a symmetric
+    edge list (src, dst): both directions of every doc pair sharing >= 3
+    distinct 3-gram shingles. Each shingle's sorted doc list explodes its
+    i<j pairs (no shingle self-join); the pair count is the number of
+    shared shingles."""
+    sh = _pair_docs(t).select("doc_id", F.explode(_shingles()).alias("shingle"))
+    pairs = (
+        sh.groupBy("shingle")
+        .agg(F.array_sort(F.collect_set("doc_id")).alias("ds"))
+        .select(bucket_pairs("ds", "x AS a, y AS b").alias("p"))
+        .groupBy("p.a", "p.b")
+        .count()
+        .filter(F.col("count") >= 3)
+    )
+    return _both_ways(pairs, "a", "b")
 
 
 #: recursive-CTE components over the shingle candidate graph — shared
@@ -809,33 +800,19 @@ _CC_ORACLE = f"""
     oracle=_CC_ORACLE,
     doc=(
         "X2 (cluster tier): connected components over the near-dup "
-        "candidate graph (>=3 shared 3-grams) by iterative min-label "
+        "candidate graph (>=3 shared 3-grams) by min-label "
         "propagation — the union-find step that turns pairwise "
-        "near-dup hits into dedup groups. Each Spark iteration is one "
-        "join+agg with lineage truncated via localCheckpoint (bounded "
-        "plans at scale); converges in <= graph-diameter rounds. The "
-        "DuckDB oracle recomputes components with a recursive CTE."
+        "near-dup hits into dedup groups. One lazy plan: the candidate "
+        "graph (not the corpus) is gathered into one adjacency row and "
+        "the label steps fold over it with aggregate(), each a "
+        "neighbor-min hop plus a pointer jump, converging in <= "
+        "graph-diameter steps. The DuckDB oracle recomputes components "
+        "with a recursive CTE."
     ),
     tags=("dedup", "llm", "graph"),
 )
 def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = Tables(spark, sf_dir)
-    docs = _pair_docs(t)
-    sh = docs.select("doc_id", F.explode(_shingles()).alias("shingle")).distinct()
-    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    pairs = (
-        a.join(b, ["shingle"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-        .filter(F.col("n_inter") >= 3)
-        .select("doc_a", "doc_b")
-    )
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).toDF("src", "dst")
-    return min_label_components(edges)
+    return min_label_components(_shingle_pairs(Tables(spark, sf_dir)))
 
 
 _SPAN_N = 8  # words per span
@@ -1259,48 +1236,20 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query. Pair generation is exact on a bounded block here "
         "(hash-verified); at 100 TB candidates come from LSH/IVF "
         "buckets and the same propagation + keep-window run unchanged. "
-        "The keep flag and cluster size come from one window over the "
-        "component key; the DuckDB oracle replays clustering with a "
+        "The cosine pairs are embedding_exact_pairs' and the components "
+        "are min_label_components' fold, so the query is one lazy plan; "
+        "the keep flag and cluster size come from one window over the "
+        "component key. The DuckDB oracle replays clustering with a "
         "recursive CTE."
     ),
     tags=("dedup", "llm", "embedding", "graph"),
 )
 def dedup_semantic_keep_representative(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     t = Tables(spark, sf_dir)
-    e = (
-        t.embeddings.filter(F.col("vec_id") < _EMB_EXACT_BLOCK)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .withColumn(
-            "nrm",
-            F.sqrt(
-                F.aggregate(
-                    F.zip_with(F.col("v"), F.col("v"), lambda x, y: x * y),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            ),
-        )
-    )
-    a = e.select(F.col("vec_id").alias("va"), F.col("v").alias("xa"), F.col("nrm").alias("na"))
-    b = e.select(F.col("vec_id").alias("vb"), F.col("v").alias("xb"), F.col("nrm").alias("nb"))
-    dot = F.aggregate(
-        F.zip_with(F.col("xa"), F.col("xb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    pairs = (
-        a.join(b, F.col("va") < F.col("vb"))
-        .withColumn("cosine", dot / (F.col("na") * F.col("nb")))
-        .filter(F.col("cosine") >= 0.35)
-        .select("va", "vb")
-    )
-    sym = pairs.selectExpr("va AS src", "vb AS dst").union(
-        pairs.selectExpr("vb AS src", "va AS dst")
-    )
+    sym = _both_ways(embedding_exact_pairs(t), "vec_a", "vec_b")
     comps = min_label_components(sym).withColumnRenamed("doc_id", "vec_id")
-    labeled = e.select("vec_id").join(comps, "vec_id", "left").select(
+    ids = t.embeddings.filter(F.col("vec_id") < _EMB_EXACT_BLOCK).select("vec_id")
+    labeled = ids.join(comps, "vec_id", "left").select(
         "vec_id", F.coalesce("component", "vec_id").alias("component")
     )
     w = W.partitionBy("component")
@@ -1313,21 +1262,17 @@ def dedup_semantic_keep_representative(spark: SparkSession, sf_dir: str) -> Data
 
 
 def _symmetrize(directed: DataFrame) -> DataFrame:
-    return (
-        directed.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .union(directed.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    return _both_ways(directed, "a", "b").filter(F.col("src") != F.col("dst")).distinct()
 
 
 def star_components(edges: DataFrame) -> DataFrame:
     """Connected components by alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
     the algorithm that holds at trillion-edge scale, where min-label
-    propagation needs diameter rounds: star rounds contract the graph
-    toward per-component stars in O(log n) rounds, every round two
-    keyed groupBy/joins (no global structure, no diameter dependence).
+    propagation gathers the graph into one row and needs diameter
+    steps: star rounds contract the graph toward per-component stars in
+    O(log n) rounds, every round two keyed groupBy/joins (no global
+    structure, no diameter dependence).
 
     ``edges``: symmetric (src, dst). Returns (doc_id, component) for
     every node that has at least one edge; component = min node id —
@@ -1383,34 +1328,19 @@ def star_components(edges: DataFrame) -> DataFrame:
         "X2 (cluster tier, second physical strategy): the SAME "
         "component labeling as dedup_connected_components, computed by "
         "the alternating large-star / small-star contraction instead "
-        "of min-label propagation. Propagation needs graph-DIAMETER "
-        "rounds — fine for near-dup clusters, fatal for long chains at "
-        "100 TB; star alternation contracts in O(log n) rounds of two "
-        "keyed aggregations each. Both strategies run against the "
-        "identical recursive-CTE oracle, which is what proves them "
-        "value-equivalent (the merge_asof-twin pattern applied to "
-        "graphs)."
+        "of min-label propagation. Propagation folds graph-DIAMETER "
+        "steps over the whole graph gathered into one row — fine for "
+        "near-dup candidate graphs, fatal for trillion-edge graphs at "
+        "100 TB; star alternation is distributed and contracts in "
+        "O(log n) rounds of two keyed aggregations each. Both "
+        "strategies run against the identical recursive-CTE oracle, "
+        "which is what proves them value-equivalent (the "
+        "merge_asof-twin pattern applied to graphs)."
     ),
     tags=("dedup", "llm", "graph", "iterative"),
 )
 def dedup_connected_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = Tables(spark, sf_dir)
-    docs = _pair_docs(t)
-    sh = docs.select("doc_id", F.explode(_shingles()).alias("shingle")).distinct()
-    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    pairs = (
-        a.join(b, ["shingle"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-        .filter(F.col("n_inter") >= 3)
-        .select("doc_a", "doc_b")
-    )
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).toDF("src", "dst")
-    return star_components(edges)
+    return star_components(_shingle_pairs(Tables(spark, sf_dir)))
 
 
 _WIN_K = 4  # words per k-gram

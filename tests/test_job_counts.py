@@ -27,6 +27,8 @@ def _jobs(spark, call):
 @pytest.mark.parametrize(
     "name",
     [
+        "dedup_connected_components",
+        "dedup_semantic_keep_representative",
         "funnel_kaplan_meier_conversion",
         "graph_pagerank_bounded",
         "graph_closeness_centrality",
@@ -65,29 +67,40 @@ def test_rewritten_table_reloads_with_its_new_schema(spark, tmp_path):
     assert sorted(map(tuple, df.collect())) == [(0, "AFRICA"), (1, "AMERICA")]
 
 
-def test_min_label_cycle_launches_at_most_eight_jobs(spark, monkeypatch):
+def _union_find(n: int, pairs) -> dict[int, int]:
+    parent = list(range(n))
+
+    def root(u: int) -> int:
+        while parent[u] != u:
+            u = parent[u]
+        return u
+
+    for a, b in pairs:
+        ra, rb = root(a), root(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {u: root(u) for a_b in pairs for u in a_b}
+
+
+@pytest.mark.parametrize(
+    "pairs",
+    [
+        [(i, i + 1) for i in range(399)],  # a 400-node path: all labeled 0
+        # several components, one a 60-node chain entered from its far end
+        [(i, i + 1) for i in range(100, 159)]
+        + [(159, 3), (3, 7), (7, 5), (20, 21), (22, 21), (40, 41), (41, 42), (42, 40)],
+        [],
+    ],
+    ids=["path", "components", "empty"],
+)
+def test_min_label_components_is_one_lazy_plan(spark, pairs):
     from severless_data_pipeline_aws_spark.operators.dedup import (
         min_label_components,
     )
 
-    # a path 0-1-...-40 needs several cycles (two hops + a pointer jump each)
-    pairs = [(i, i + 1) for i in range(40)]
     edges = spark.createDataFrame(
         pairs + [(b, a) for a, b in pairs], "src bigint, dst bigint"
     )
-    marks = []  # next job id after each checkpoint: the edges, then one per cycle
-    cls = type(edges)
-    checkpoint = cls.localCheckpoint
-
-    def counted(self, *args, **kwargs):
-        out = checkpoint(self, *args, **kwargs)
-        marks.append(_next_job(spark))
-        return out
-
-    monkeypatch.setattr(cls, "localCheckpoint", counted)
-    comps = min_label_components(edges)
-    monkeypatch.undo()
-    cycles = [b - a for a, b in zip(marks, marks[1:])]
-    assert len(cycles) >= 3, cycles
-    assert max(cycles) <= 8, cycles
-    assert {r["component"] for r in comps.collect()} == {0}
+    jobs, comps = _jobs(spark, lambda: min_label_components(edges))
+    assert jobs == 0
+    got = {r["doc_id"]: r["component"] for r in comps.collect()}
+    assert got == _union_find(400, pairs)

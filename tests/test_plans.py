@@ -721,6 +721,8 @@ def test_time_to_convert_partition_invariance(spark, sf_dir):
 _BNLJ_BOUNDED_OK = {
     # one-row scalar broadcasts (grand totals, corpus stats, maxima)
     "dedup_embedding_cosine", "dq_freshness_lag_monitor",
+    # the same bounded-block cosine pairs feed its components fold
+    "dedup_semantic_keep_representative",
     "funnel_market_basket_lift", "funnel_survival_curve",
     "funnel_time_to_convert", "graph_modularity_by_region",
     "sketch_hll_intersection_estimate", "stats_kruskal_wallis",

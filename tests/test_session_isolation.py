@@ -35,6 +35,7 @@ _CONFS = ("spark.sql.shuffle.partitions", "spark.sql.sources.partitionOverwriteM
         "streaming_tumbling_window_agg",  # memory sink + partition clamp
         "graph_hits_hubs_authorities",  # persisted its edge list and nodes
         "graph_closeness_centrality",  # persisted every BFS round
+        "dedup_connected_components",  # checkpointed its edges and labels
     ],
 )
 def test_query_leaves_no_session_state(name, spark, sf_dir):
@@ -43,10 +44,13 @@ def test_query_leaves_no_session_state(name, spark, sf_dir):
     confs = {k: session.conf.get(k) for k in _CONFS}
     # the cache manager is shared by every session of the application
     session.catalog.clearCache()
+    rdds = set(session.sparkContext._jsc.getPersistentRDDs().keySet())
     assert SPECS[name].fn(session, sf_dir).count() > 0
     assert [t.name for t in session.catalog.listTables()] == []
     assert {k: session.conf.get(k) for k in _CONFS} == confs
     assert session._jsparkSession.sharedState().cacheManager().isEmpty()
+    # checkpoints are persisted RDDs the cache manager does not list
+    assert set(session.sparkContext._jsc.getPersistentRDDs().keySet()) <= rdds
 
 
 #: 8 distinct queries for one session: two streaming replays, four that
