@@ -84,6 +84,24 @@ def bucket_pairs(arr: str, struct_body: str) -> Column:
     )
 
 
+def ngrams(col: str, n: int) -> Column:
+    """Word n-grams of a text column, in order: each run of ``n``
+    consecutive words of ``split(col, ' ')`` joined by one space, and
+    none when the text has fewer than ``n`` words (DuckDB's
+    ``range(1, len(words) - n + 2)`` twin).
+
+    The text is split once: the word array is bound by a lambda over a
+    one-element array, and its ``n`` shifted slices of the gram count
+    are zipped, so no per-position lambda splits the text again."""
+    k = f"greatest(size(w) - {n - 1}, 0)"
+    slices = ", ".join(f"slice(w, {i}, {k})" for i in range(1, n + 1))
+    words = ", ".join(f"z.`{i}`" for i in range(n))
+    return F.expr(
+        f"element_at(transform(array(split({col}, ' ')),"
+        f" w -> transform(arrays_zip({slices}), z -> concat_ws(' ', {words}))), 1)"
+    )
+
+
 def dsum(expr_sql: str) -> Column:
     """Order-independent exact sum of a double expression (Spark side)."""
     return F.sum(F.expr(f"CAST(({expr_sql}) AS {DEC})"))

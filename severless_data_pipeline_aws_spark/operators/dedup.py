@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..io import Tables
 from ..registry import register
-from ._helpers import bucket_pairs, materialize, spread
+from ._helpers import bucket_pairs, materialize, ngrams, spread
 
 #: documents subset used by the quadratic-adjacent verification queries —
 #: candidate joins stay bounded while still covering many near-dup pairs.
@@ -73,12 +73,7 @@ _SHINGLE_CTE_SQL = f"""sh AS (
 
 def _shingles(col: str = "text", n: int = 3):
     """Distinct word n-gram shingles of a text column (JVM-side exprs)."""
-    return F.array_distinct(
-        F.expr(
-            f"transform(sequence(1, greatest(size(split({col}, ' ')) - {n - 1}, 0)), "
-            f"i -> concat_ws(' ', slice(split({col}, ' '), i, {n})))"
-        )
-    )
+    return F.array_distinct(ngrams(col, n))
 
 
 #: The synthetic corpus has no byte-identical duplicates below sf0.1, so
@@ -717,37 +712,50 @@ def min_label_components(edges: DataFrame) -> DataFrame:
     (columns ``src``, ``dst``) -> one row per node: (doc_id, component =
     min node id of its component), as one lazy plan.
 
-    The adjacency is gathered into one row (``adj``: node -> neighbor
-    list) and the labels fold over it with ``aggregate()``: each step
-    sets every label to the min of itself, its label's label (a pointer
-    jump — valid because every label is a node id in the same
-    component) and its neighbors' labels. Labels reach the component
-    minimum within the graph's diameter (at most n - 1 steps, the fold's
-    length), and once a step changes nothing the rest are no-ops. The
-    row holds the candidate graph, not the corpus; at trillion-edge
-    scale :func:`star_components` is the distributed strategy. Shared by
-    the shingle-graph and semantic (embedding-cosine) cluster queries."""
-    adj = (
+    The adjacency is gathered into one row, sorted by node id: ``vs``
+    (the node ids) and ``nbr`` (each node's neighbors as positions in
+    ``vs``). Labels are positions too — the sort makes the smallest
+    position the smallest id — held in an array indexed by position, so
+    every lookup in the fold is O(1) (a map lookup scans its keys). The
+    labels fold with ``aggregate()``: each step sets every label to the
+    min of itself, its label's label (a pointer jump — valid because
+    every label is a node in the same component) and its neighbors'
+    labels. Labels reach the component minimum within the graph's
+    diameter (at most n - 1 steps, the fold's length), and once a step
+    changes nothing the rest are no-ops. The row holds the candidate
+    graph, not the corpus; at trillion-edge scale
+    :func:`star_components` is the distributed strategy. Shared by the
+    shingle-graph and semantic (embedding-cosine) cluster queries."""
+    g = (
         edges.groupBy("src")
         .agg(F.collect_list("dst").alias("ns"))
-        .agg(F.map_from_entries(F.collect_list(F.struct("src", "ns"))).alias("adj"))
+        .agg(
+            F.array_sort(F.collect_list("src")).alias("vs"),
+            F.array_sort(F.collect_list(F.struct("src", "ns"))).alias("g"),
+        )
     )
-    labels = adj.select(
-        "adj",
+    # nbr rides in the accumulator: it is built once, and a column read
+    # only inside the step lambda would be inlined and rebuilt per call
+    labels = g.select(
+        "vs",
         F.expr(
-            """aggregate(sequence(1, size(adj)),
-                named_struct('prev', filter(map_keys(adj), v -> false),
-                             'm', map_from_arrays(map_keys(adj), map_keys(adj))),
-                (acc, i) -> IF(acc.prev = map_values(acc.m), acc, named_struct(
-                    'prev', map_values(acc.m),
-                    'm', transform_values(acc.m, (v, l) -> least(
-                        l, acc.m[l], array_min(transform(adj[v], w -> acc.m[w]))))))).m"""
-        ).alias("m")
+            """aggregate(sequence(1, size(vs)),
+                named_struct(
+                    'nbr', transform(g, x -> transform(x.ns, w -> CAST(array_position(vs, w) AS INT) - 1)),
+                    'prev', CAST(array() AS ARRAY<INT>),
+                    'l', transform(vs, (v, i) -> i)),
+                (acc, s) -> IF(acc.prev = acc.l, acc, named_struct(
+                    'nbr', acc.nbr,
+                    'prev', acc.l,
+                    'l', transform(acc.l, (l, i) -> least(
+                        l, acc.l[l], array_min(transform(acc.nbr[i], w -> acc.l[w])))))),
+                acc -> acc.l)"""
+        ).alias("l"),
     )
     # explode the node list, not the fold: the non-empty filter Spark
     # infers on a generator's input would otherwise copy the fold
-    return labels.select(F.explode(F.map_keys("adj")).alias("doc_id"), "m").select(
-        "doc_id", F.col("m")[F.col("doc_id")].alias("component")
+    return labels.select(F.posexplode("vs").alias("i", "doc_id"), "vs", "l").select(
+        "doc_id", F.col("vs")[F.col("l")[F.col("i")]].alias("component")
     )
 
 
@@ -856,12 +864,7 @@ def dedup_repeated_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = duplicated_corpus(t)
     spans = corpus.select(
         "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, greatest(size(split(text, ' ')) - {_SPAN_N - 1}, 0)), "
-                f"i -> concat_ws(' ', slice(split(text, ' '), i, {_SPAN_N})))"
-            )
-        ).alias("span"),
+        F.explode(ngrams("text", _SPAN_N)).alias("span"),
     )
     return (
         spans.groupBy("span")

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..io import Tables
 from ..registry import register
-from ._helpers import materialize, spread
+from ._helpers import materialize, ngrams, spread
 
 #: tiny stopword list used by quality scoring + language ID (the
 #: documents fixture is synthetic word soup, so this is an operator
@@ -1662,18 +1662,7 @@ def ngram_novelty_grams(documents: DataFrame) -> DataFrame:
     the gram expression; the registered query aggregates exactly this."""
     return documents.select(
         "doc_id",
-        F.explode(
-            F.array_distinct(
-                # sequence(1, 0) counts DOWN (the text_top_bigrams
-                # lesson), so docs under 3 words take the empty branch
-                F.expr(
-                    "CASE WHEN size(split(text, ' ')) >= 3 THEN "
-                    "transform(sequence(1, size(split(text, ' ')) - 2),"
-                    " i -> concat_ws(' ', slice(split(text, ' '), i, 3)))"
-                    " ELSE array() END"
-                )
-            )
-        ).alias("gram"),
+        F.explode(F.array_distinct(ngrams("text", 3))).alias("gram"),
     )
 
 

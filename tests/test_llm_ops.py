@@ -910,3 +910,34 @@ def test_beam_graph_edges_bounded_degree(spark, sf_dir):
         assert e.src >= _N_QUERIES and e.dst >= _N_QUERIES
         deg[e.src] = deg.get(e.src, 0) + 1
     assert deg and max(deg.values()) <= _BEAM_M
+
+
+def test_ngrams_match_the_oracle_on_short_texts(spark):
+    """Texts of 0 to 4 words (and one with an empty word): the Spark
+    n-gram kernel yields exactly the grams its DuckDB twins define, none
+    below n words. Spark's ``sequence(1, 0)`` counts down, so a per-
+    position kernel once sliced from position 0 and raised on them."""
+    import duckdb
+
+    from severless_data_pipeline_aws_spark.operators._helpers import ngrams
+    from severless_data_pipeline_aws_spark.operators.dedup import _SHINGLE_CTE_SQL, _shingles
+
+    rows = list(enumerate(["", "a", "a b", "a b c", "a b c d", "a  b c d"], 1))
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+
+    want = set(con.execute(f"WITH {_SHINGLE_CTE_SQL} SELECT doc_id, shingle FROM sh").fetchall())
+    got = {tuple(r) for r in df.select("doc_id", F.explode(_shingles()).alias("s")).collect()}
+    assert got == want
+    for n in (1, 2, 3, 4, 8):
+        # the span query's oracle definition, for any n
+        want = dict(con.execute(
+            f"SELECT doc_id, list_transform(range(1, len(w) - {n} + 2),"
+            f" i -> array_to_string(w[i : i + {n} - 1], ' '))"
+            " FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)"
+        ).fetchall())
+        got = {r[0]: list(r[1]) for r in df.select("doc_id", ngrams("text", n)).collect()}
+        assert got == want, n
+    con.close()
