@@ -69,19 +69,24 @@ def spread(df: DataFrame) -> DataFrame:
     return df
 
 
+def pair_structs(arr: str, struct_body: str) -> str:
+    """SQL for the array of every i<j pair of the array column ``arr``,
+    each as ``struct(struct_body)`` with ``x`` bound to element i and
+    ``y`` to element j."""
+    return (
+        f"flatten(transform({arr}, (x, i) ->"
+        f" transform(slice({arr}, i + 2, size({arr}) - i - 1),"
+        f" y -> struct({struct_body}))))"
+    )
+
+
 def bucket_pairs(arr: str, struct_body: str) -> Column:
     """Explode every i<j pair of the array column ``arr`` as one
-    ``struct(struct_body)`` row, with ``x`` bound to element i and ``y``
-    to element j — the pair generator that replaces a bucket self-join
-    (each element is read once, and the pair set is the join's i<j half
-    when ``arr`` is sorted and duplicate-free)."""
-    return F.explode(
-        F.expr(
-            f"flatten(transform({arr}, (x, i) ->"
-            f" transform(slice({arr}, i + 2, size({arr}) - i - 1),"
-            f" y -> struct({struct_body}))))"
-        )
-    )
+    ``struct(struct_body)`` row (:func:`pair_structs`) — the pair
+    generator that replaces a bucket self-join (each element is read
+    once, and the pair set is the join's i<j half when ``arr`` is sorted
+    and duplicate-free)."""
+    return F.explode(F.expr(pair_structs(arr, struct_body)))
 
 
 def ngrams(col: str, n: int) -> Column:

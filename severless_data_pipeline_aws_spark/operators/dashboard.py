@@ -207,10 +207,11 @@ def dashboard_column_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM events GROUP BY event_type ORDER BY event_type
     """,
     doc=(
-        "S8: the dashboard's cached scan (iot_dashboard.py:45) — the "
-        "status-count result is marked .cache() so repeated dashboard "
-        "interactions reuse the materialized aggregate; results are "
-        "identical to the uncached plan."
+        "S8: the dashboard's cached scan (iot_dashboard.py:45) as a lazy "
+        "plan. The query persists nothing: the caller owns the result "
+        "cache (cache.TTLCache.get_or_build, the st.cache_data(ttl=60) "
+        "twin), so repeated dashboard interactions reuse one "
+        "materialized aggregate until its TTL expires."
     ),
     tags=("dashboard", "cache"),
 )
@@ -220,7 +221,6 @@ def dashboard_cached_status_counts(spark: SparkSession, sf_dir: str) -> DataFram
         t.events.groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("event_type")
-        .cache()
     )
 
 
@@ -2467,20 +2467,19 @@ def _geo_dbscan_oracle() -> str:
         "(one shuffle), then neighborhood tests become cell-key "
         "equi-joins and the component loop runs on the bounded "
         "lattice — epsilon-ball cross joins never exist at any corpus "
-        "size. Components via the dedup tier's shared large-star/"
-        "small-star contraction (operators/dedup.py:star_components — "
-        "O(log n) rounds, NO diameter dependence: the r8 sf0.1 spot "
-        "check caught min-label propagation failing to converge on "
-        "this lattice's long snaking components within its 20-round "
-        "bound, exactly the failure mode star contraction removes), "
-        "proven against the oracle's recursive-CTE reachable-set "
-        "fold; cluster_id is the component's minimum cell id, so "
-        "labels are deterministic on both engines."
+        "size. Components via the dedup tier's min-label fold "
+        "(operators/dedup.py:min_label_components): the <= 648-cell "
+        "core graph is gathered into one row and its labels fold for "
+        "up to n - 1 steps, so the lattice's long snaking components "
+        "converge and the query stays one lazy plan. Proven against "
+        "the oracle's recursive-CTE reachable-set fold; cluster_id is "
+        "the component's minimum cell id, so labels are deterministic "
+        "on both engines."
     ),
     tags=("geo", "dashboard", "graph"),
 )
 def geo_dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import star_components
+    from .dedup import min_label_components
     from .stats import _geo_cells
 
     t = Tables(spark, sf_dir)
@@ -2499,7 +2498,7 @@ def geo_dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = nbrs.join(
         other, F.col("dst") == F.col("cid") + F.col("doff")
     ).select(F.col("cid").alias("src"), "dst")
-    comps = star_components(edges).withColumnRenamed("doc_id", "cid2")
+    comps = min_label_components(edges).withColumnRenamed("doc_id", "cid2")
     labeled = core.join(
         comps, core["cid"] == comps["cid2"], "left"
     ).select(

@@ -725,7 +725,8 @@ def min_label_components(edges: DataFrame) -> DataFrame:
     changes nothing the rest are no-ops. The row holds the candidate
     graph, not the corpus; at trillion-edge scale
     :func:`star_components` is the distributed strategy. Shared by the
-    shingle-graph and semantic (embedding-cosine) cluster queries."""
+    shingle-graph and semantic (embedding-cosine) cluster queries and the
+    grid-DBSCAN lattice (``geo_dbscan_grid_clusters``)."""
     g = (
         edges.groupBy("src")
         .agg(F.collect_list("dst").alias("ns"))
@@ -1506,9 +1507,7 @@ def prefix_jaccard_candidates(docs: DataFrame):
     exact candidates."""
     from pyspark.sql.window import Window as W
 
-    tok = docs.select(
-        "doc_id", F.explode(_shingles()).alias("token")
-    ).distinct().persist()
+    tok = docs.select("doc_id", F.explode(_shingles()).alias("token")).distinct()
     sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     df = tok.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     # prefix = first (n - ceil(tau*n) + 1) shingles in global (df, token)

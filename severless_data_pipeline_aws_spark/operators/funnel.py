@@ -31,7 +31,7 @@ from pyspark.sql.window import Window as W
 
 from ..io import Tables
 from ..registry import register
-from ._helpers import bucket_pairs
+from ._helpers import pair_structs
 from .sampling import _H_DUCK, _H_SPARK
 
 _PASS_LANG = "lang = 'en'"
@@ -778,12 +778,15 @@ def funnel_new_vs_returning_users(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
     doc=(
         "Market-basket association rules over order baskets at the "
-        "brand grain: distinct (order, brand) -> bounded self-join on "
-        "the basket key (<=C(25,2) pairs per order, never an unbounded "
-        "explosion), integer support counts, support/confidence/lift as "
-        "exact integer ratios, top-20 lift via TakeOrderedAndProject. "
-        "Scale: the pair space is |brands|^2-bounded no matter how many "
-        "orders; item_counts and n_baskets are broadcast-sized."
+        "brand grain: one shuffle builds each order's sorted brand set, "
+        "which emits the basket, its brands and its i<j brand pairs "
+        "map-side (<=C(25,2) pairs per order, never a self-join); one "
+        "aggregate counts all three, integer support counts, "
+        "support/confidence/lift as exact integer ratios, top-20 lift "
+        "via TakeOrderedAndProject. Scale: the count table is "
+        "|brands|^2-bounded no matter how many orders, so it is gathered "
+        "into one row and each pair looks its item and basket counts up "
+        "there; the fact side is scanned once."
     ),
     tags=("funnel", "reco", "join"),
 )
@@ -797,27 +800,40 @@ def funnel_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.lineitem.join(t.part, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy(F.col("l_orderkey").alias("basket"))
         .agg(F.array_sort(F.collect_set("p_brand")).alias("items"))
-        .persist()
     )
-    item_counts = (
-        baskets.select(F.explode("items").alias("item"))
-        .groupBy("item")
+    # each basket also emits itself (a = b = NULL) and each of its items
+    # (b = NULL), so one aggregate counts baskets, items and pairs
+    null = "CAST(NULL AS STRING)"
+    rows = (
+        f"concat(array(struct({null} AS a, {null} AS b)),"
+        f" transform(items, x -> struct(x AS a, {null} AS b)),"
+        f" {pair_structs('items', 'x AS a, y AS b')})"
+    )
+    counts = (
+        baskets.select(F.inline(F.expr(rows)))
+        .groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    n_baskets = baskets.agg(F.count(F.lit(1)).alias("n_baskets"))
-    pairs = (
-        baskets.select(bucket_pairs("items", "x AS item_a, y AS item_b").alias("p"))
-        .select(F.col("p.item_a").alias("item_a"), F.col("p.item_b").alias("item_b"))
-        .groupBy("item_a", "item_b")
-        .agg(F.count(F.lit(1)).alias("pair_n"))
-        .filter(F.col("pair_n") >= 5)
-    )
-    ca = item_counts.select(F.col("item").alias("item_a"), F.col("c").alias("n_a"))
-    cb = item_counts.select(F.col("item").alias("item_b"), F.col("c").alias("n_b"))
+    # <= 1 + |brands| + C(|brands|, 2) rows, gathered into one row: each
+    # kept pair looks its item and basket counts up there, so the basket
+    # table is read once and nothing is joined back to it
     scored = (
-        pairs.join(F.broadcast(ca), "item_a")
-        .join(F.broadcast(cb), "item_b")
-        .crossJoin(F.broadcast(n_baskets))
+        counts.agg(F.collect_list(F.struct("a", "b", "c")).alias("g"))
+        .select(
+            "g",
+            F.expr(
+                "map_from_entries(transform(filter(g, r -> r.a IS NOT NULL AND r.b IS NULL),"
+                " r -> struct(r.a, r.c)))"
+            ).alias("n"),
+            F.expr("aggregate(filter(g, r -> r.a IS NULL), 0L, (s, r) -> s + r.c)").alias("n_baskets"),
+        )
+        .select(
+            F.expr(
+                """inline(transform(filter(g, r -> r.b IS NOT NULL AND r.c >= 5), p -> struct(
+                    p.a AS item_a, p.b AS item_b, p.c AS pair_n,
+                    n[p.a] AS n_a, n[p.b] AS n_b, n_baskets)))"""
+            )
+        )
         .select(
             "item_a",
             "item_b",
@@ -1297,6 +1313,50 @@ def _absorb_oracle() -> str:
     """
 
 
+def _transitions(t: Tables):
+    """The event stream's Markov chain, collected once (metadata-scale:
+    |states|^2 rows): ``m`` the (prev, next, n) counts of transitions
+    that do not absorb, ``tot`` each state's (n_out, n_to_absorb). A
+    lead window per user pairs each event with the next; nothing leaves
+    the absorbing state."""
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
+    trans = (
+        t.events.select("event_type", F.lead("event_type").over(w).alias("next_type"))
+        .filter(F.col("next_type").isNotNull() & (F.col("event_type") != _ABSORB_STATE))
+        .groupBy("event_type", "next_type")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+        .collect()
+    )
+    m = [(s, nt, n) for s, nt, n in trans if nt != _ABSORB_STATE]
+    tot: dict[str, tuple[int, int]] = {}
+    for s, nt, n in trans:
+        n_out, n_abs = tot.get(s, (0, 0))
+        tot[s] = (n_out + n, n_abs + (n if nt == _ABSORB_STATE else 0))
+    return m, tot
+
+
+def _absorb(m, tot, removed: str | None) -> dict[str, int]:
+    """Each state's probability of absorbing within ``_ABSORB_STEPS``
+    steps, as a 1e12-scaled integer with truncating division per step
+    (the oracle's unrolled-CTE recurrence, bit for bit), with state
+    ``removed`` deleted from the chain: edges into it lose their mass
+    and row totals keep their denominator. ``removed=None`` is the full
+    chain."""
+    sc = int(_ABSORB_SC)
+    states = [s for s in tot if s != removed]
+    p = {s: 0 for s in states}
+    for _ in range(_ABSORB_STEPS):
+        p = {
+            s: (
+                tot[s][1] * sc
+                + sum(n * p.get(nt, 0) for pt, nt, n in m if pt == s and nt != removed)
+            )
+            // tot[s][0]
+            for s in states
+        }
+    return p
+
+
 @register(
     "funnel_markov_absorbing_conversion",
     oracle=_absorb_oracle(),
@@ -1321,51 +1381,9 @@ def _absorb_oracle() -> str:
     tags=("funnel", "attribution", "graph"),
 )
 def funnel_markov_absorbing_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    t = Tables(spark, sf_dir)
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = t.events.select(
-        "user_id",
-        "event_type",
-        F.lead("event_type").over(w).alias("next_type"),
-    )
-    trans = (
-        seq.filter(
-            F.col("next_type").isNotNull()
-            & (F.col("event_type") != _ABSORB_STATE)
-        )
-        .groupBy(F.col("event_type").alias("prev_type"), "next_type")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    )
-    totals = trans.groupBy("prev_type").agg(
-        F.sum("n").cast("bigint").alias("n_out"),
-        F.coalesce(
-            F.sum(F.when(F.col("next_type") == _ABSORB_STATE, F.col("n"))),
-            F.lit(0),
-        )
-        .cast("bigint")
-        .alias("n_to_absorb"),
-    )
-    # metadata-scale from here: collect the matrix once, iterate locally,
-    # and hand the exact integer vector back as a literal frame
-    m = [
-        (r["prev_type"], r["next_type"], r["n"])
-        for r in trans.filter(F.col("next_type") != _ABSORB_STATE).collect()
-    ]
-    tot = {r["prev_type"]: (r["n_out"], r["n_to_absorb"]) for r in totals.collect()}
-    sc = int(_ABSORB_SC)
-    p = {s: 0 for s in tot}
-    for _ in range(_ABSORB_STEPS):
-        p = {
-            s: (tot[s][1] * sc + sum(n * p.get(nt, 0) for pt, nt, n in m if pt == s))
-            // tot[s][0]
-            for s in tot
-        }
-    rows = [
-        (s, tot[s][0], tot[s][1], p[s])
-        for s in sorted(tot)
-    ]
+    m, tot = _transitions(Tables(spark, sf_dir))
+    p = _absorb(m, tot, None)
+    rows = [(s, tot[s][0], tot[s][1], p[s]) for s in sorted(tot)]
     out = spark.createDataFrame(
         rows, "state string, n_transitions bigint, n_to_absorb bigint, p_scaled bigint"
     )
@@ -1523,28 +1541,8 @@ def _markov_removal_oracle() -> str:
     tags=("funnel", "attribution", "graph"),
 )
 def funnel_markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     t = Tables(spark, sf_dir)
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = t.events.select(
-        "user_id", "event_type", F.lead("event_type").over(w).alias("next_type")
-    )
-    trans = (
-        seq.filter(
-            F.col("next_type").isNotNull() & (F.col("event_type") != _ABSORB_STATE)
-        )
-        .groupBy(F.col("event_type").alias("prev_type"), "next_type")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    )
-    totals = trans.groupBy("prev_type").agg(
-        F.sum("n").cast("bigint").alias("n_out"),
-        F.coalesce(
-            F.sum(F.when(F.col("next_type") == _ABSORB_STATE, F.col("n"))), F.lit(0)
-        )
-        .cast("bigint")
-        .alias("n_to_absorb"),
-    )
+    m, tot = _transitions(t)
     starts = (
         t.events.groupBy("user_id")
         .agg(F.expr("min_by(event_type, struct(ts, event_id))").alias("state"))
@@ -1552,11 +1550,6 @@ def funnel_markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataF
         .groupBy("state")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_start"))
     )
-    m = [
-        (r["prev_type"], r["next_type"], r["n"])
-        for r in trans.filter(F.col("next_type") != _ABSORB_STATE).collect()
-    ]
-    tot = {r["prev_type"]: (r["n_out"], r["n_to_absorb"]) for r in totals.collect()}
     st = {r["state"]: r["n_start"] for r in starts.collect()}
     n_users = sum(st.values())
     sc = int(_ABSORB_SC)
@@ -1564,32 +1557,13 @@ def funnel_markov_removal_attribution(spark: SparkSession, sf_dir: str) -> DataF
     def iterate(removed):
         if n_users == 0:
             return 0  # zero-row input: no users, no conversion mass
-        states = [s for s in tot if s != removed]
-        p = {s: 0 for s in states}
-        for _ in range(_ABSORB_STEPS):
-            p = {
-                s: (
-                    tot[s][1] * sc
-                    + sum(n * p.get(nt, 0) for pt, nt, n in m if pt == s and nt != removed)
-                )
-                // tot[s][0]
-                for s in states
-            }
+        p = _absorb(m, tot, removed)
         return sum(st[s] * p.get(s, 0) for s in st if s != removed) // n_users
 
     base = iterate(None)
     rems = {ch: iterate(ch) for ch in _MARKOV_CHANNELS}
     eff_total = sum(base - r for r in rems.values())
-    rows = [
-        (
-            ch,
-            st.get(ch, 0),
-            base,
-            rems[ch],
-            base - rems[ch],
-        )
-        for ch in _MARKOV_CHANNELS
-    ]
+    rows = [(ch, st.get(ch, 0), base, rems[ch], base - rems[ch]) for ch in _MARKOV_CHANNELS]
     out = spark.createDataFrame(
         rows,
         "channel string, n_starts bigint, base_scaled bigint,"

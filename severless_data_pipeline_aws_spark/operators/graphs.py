@@ -9,12 +9,12 @@ re-expand. At 100 TB the same loop runs unchanged on a cluster: the
 edge list is hash-partitioned on src once and every round reuses that
 partitioning; the visited set stays bucketed by node.
 
-Nothing here is persisted: an intermediate that more than one job
-reads is checkpointed eagerly (``materialize()`` for part-supplier
-frames, which grow with lineitem; one plain ``localCheckpoint`` for
-the nation edge list of ``_co_edges``), so a query leaves no blocks in
-the session-shared cache. Every nation co-trade query starts from the
-pairs of ``_co_pairs``; the iterative ones fold their rounds over the
+Nothing here is persisted: the part-supplier frames that more than one
+job reads, which grow with lineitem, go through ``materialize()``, so a
+query leaves no blocks in the session-shared cache. Every nation
+co-trade query starts from the pairs of ``_co_pairs`` and is one lazy
+plan: the ones over ``_co_edges`` read the edge list several times
+within one action, and the iterative ones fold their rounds over the
 <= 25-node graph that ``_nation_graph`` gathers into one row.
 
 Reference parity: the reference has no graph operators — this extends
@@ -51,19 +51,13 @@ def _co_pairs(t: Tables, min_price: int) -> DataFrame:
 def _co_edges(t: Tables):
     """Spark twin of ``_CO_EDGE_SQL``: (ordered u < v edge list of the
     high-value co-trade graph, degree table)."""
-    # downstream shapes reference the edge list 3-6 times (degree
-    # union, symmetric expansion, the triangle 3-join). A lazy persist
-    # is NOT enough: within one action the parallel branches race the
-    # cache and each re-executes the 4-table co-occurrence join — the
-    # dominant cost at any scale. Eager localCheckpoint materializes
-    # once at build time; the edge list is nation-pair bounded (<= 625
-    # rows at ANY SF), so the checkpoint is metadata-sized.
-    e = (
-        _co_pairs(t, 400000)
-        .select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    # callers read the edge list 3-6 times in one plan (degree union,
+    # symmetric expansion, the triangle 3-join). The <= 300 edges are
+    # gathered into one row and exploded: no filter a reader adds passes
+    # the explode, so every read is the same subtree and the 4-table
+    # join's exchange runs once, the other reads being ReusedExchange.
+    uv = F.struct(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
+    e = _co_pairs(t, 400000).agg(F.collect_set(uv).alias("e")).select(F.inline("e"))
     deg = (
         e.select(F.col("u").alias("node"))
         .union(e.select(F.col("v").alias("node")))
@@ -2142,8 +2136,8 @@ def graph_knn_degree_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "construction; both engines integer-divide). Codegrees come "
         "from one equi-self-join of the symmetric adjacency on the "
         "shared-neighbor key (the common-neighbors link-prediction "
-        "shape) over the localCheckpointed <=625-row co-trade edge "
-        "list — metadata-scale at any SF; on a real 100 TB graph the "
+        "shape) over the lazy co-trade edge list (<= 300 edges) — "
+        "metadata-scale at any SF; on a real 100 TB graph the "
         "same plan is the standard codegree shuffle, never an "
         "all-pairs scan."
     ),

@@ -1089,7 +1089,7 @@ def sampling_kcenter_greedy_coreset(spark: SparkSession, sf_dir: str) -> DataFra
     from .similarity import _as_double
 
     t = Tables(spark, sf_dir)
-    emb = t.embeddings.select("vec_id", _as_double("embedding").alias("v")).persist()
+    emb = t.embeddings.select("vec_id", _as_double("embedding").alias("v"))
 
     schema = "pick int, vec_id bigint, min_d2 double"
     seed_rows = emb.orderBy("vec_id").limit(1).collect()

@@ -992,11 +992,10 @@ _PCA_STEP_SQL = """
 )
 def similarity_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = Tables(spark, sf_dir)
-    emb = t.embeddings.select("vec_id", _as_double("embedding").alias("v")).persist()
+    emb = t.embeddings.select("vec_id", _as_double("embedding").alias("v"))
     dims = (
         emb.select("vec_id", F.posexplode("v").alias("dim0", "x"))
         .select("vec_id", (F.col("dim0") + 1).alias("dim"), "x")
-        .persist()
     )
     vcur = emb.limit(1).select(
         F.expr(
@@ -1121,11 +1120,10 @@ def similarity_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     t = Tables(spark, sf_dir)
-    emb = t.embeddings.select("vec_id", _as_double("embedding").alias("v")).persist()
+    emb = t.embeddings.select("vec_id", _as_double("embedding").alias("v"))
     dims = (
         emb.select("vec_id", F.posexplode("v").alias("dim0", "x"))
         .select("vec_id", (F.col("dim0") + 1).alias("dim"), "x")
-        .persist()
     )
     dist_expr = F.expr(
         "aggregate(zip_with(v, cvec, (a, b) -> (a - b) * (a - b)), "
@@ -1158,7 +1156,6 @@ def similarity_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cid")
         .agg(F.array_sort(F.collect_list(F.struct("dim", "cx"))).alias("pairs"))
         .select("cid", F.expr("transform(pairs, p -> p.cx)").alias("cvec"))
-        .localCheckpoint(eager=True)
     )
     return assign(cent1).select(
         "vec_id", F.col("cid").cast("bigint").alias("cluster"), "dist"
@@ -1451,7 +1448,7 @@ def pq_codebook(spark: SparkSession, emb: DataFrame) -> DataFrame:
     ADC query carry an exact DuckDB oracle (r5)."""
     from pyspark.sql import Window as W
 
-    subs = _pq_subvectors(emb, "vec_id").persist()
+    subs = _pq_subvectors(emb, "vec_id")
     seeds = (
         subs.filter(F.col("vec_id") < _PQ_K)
         .select("m", F.col("vec_id").alias("cid"), F.col("sv").alias("cvec"))
@@ -1477,7 +1474,6 @@ def pq_codebook(spark: SparkSession, emb: DataFrame) -> DataFrame:
         .groupBy("m", "cid")
         .agg(F.array_sort(F.collect_list(F.struct("dim", "cx"))).alias("pairs"))
         .select("m", "cid", F.expr("transform(pairs, p -> p.cx)").alias("cvec"))
-        .localCheckpoint(eager=True)
     )
 
 

@@ -531,20 +531,14 @@ _SESSION_WRITERS = {
 }
 
 
-#: (file, function) pairs that may still persist or cache a Dataset.
-#: A persisted Dataset sits in the cache manager every session shares,
-#: so it is session state too; multi-job intermediates elsewhere are
-#: checkpointed eagerly instead. The list only shrinks.
+#: (file, function) pairs that may persist or cache a Dataset: the
+#: caller-owned result cache and the materialization helper. A persisted
+#: Dataset sits in the cache manager every session shares, so it is
+#: session state too; a query's intermediate is lazy or goes through
+#: materialize().
 _PERSISTERS = {
     ("cache.py", "get_or_build"),
     (os.path.join("operators", "_helpers.py"), "materialize"),
-    (os.path.join("operators", "dashboard.py"), "dashboard_cached_status_counts"),
-    (os.path.join("operators", "dedup.py"), "prefix_jaccard_candidates"),
-    (os.path.join("operators", "funnel.py"), "funnel_market_basket_lift"),
-    (os.path.join("operators", "sampling.py"), "sampling_kcenter_greedy_coreset"),
-    (os.path.join("operators", "similarity.py"), "pq_codebook"),
-    (os.path.join("operators", "similarity.py"), "similarity_kmeans_lloyd"),
-    (os.path.join("operators", "similarity.py"), "similarity_pca_top_component"),
 }
 
 

@@ -37,6 +37,15 @@ def _jobs(spark, call):
         "graph_kcore_decomposition",
         "graph_label_propagation_communities",
         "graph_ktruss_decomposition",
+        "geo_dbscan_grid_clusters",
+        # the readers of the lazy nation co-trade edge list (_co_edges)
+        "graph_triangle_count",
+        "graph_modularity_by_region",
+        "graph_clustering_coefficient",
+        "graph_katz_centrality_bounded",
+        "graph_local_clustering_per_node",
+        "graph_knn_degree_correlation",
+        "graph_four_cycle_count",
     ],
 )
 def test_iterative_query_build_launches_no_jobs(spark, sf_dir, name):

@@ -138,13 +138,12 @@ def test_quantile_rank_interval_rejects_bad_estimate(spark, tmp_path):
 
 
 def test_star_components_converge_past_min_label_round_bound(spark):
-    """The r8 sf0.1 spot check caught grid-DBSCAN's components drifting
-    from the oracle: min-label propagation is capped at 20 rounds, and
-    the dense sf0.1 lattice has snaking core components with diameter
-    far beyond that, so two extra (unmerged) clusters appeared. The op
-    now uses star_components (O(log n) rounds, diameter-free). Pin the
-    failure mode directly: a 300-node path graph — diameter 299 —
-    must collapse to ONE component labeled by its minimum node."""
+    """A capped round count fails on long paths: the r8 sf0.1 spot
+    check caught grid-DBSCAN's snaking lattice components left unmerged
+    by a 20-round min-label loop. star_components (O(log n) rounds,
+    diameter-free) must collapse a 300-node path graph — diameter 299 —
+    to ONE component labeled by its minimum node. The min-label fold now
+    runs up to n - 1 steps (pinned in test_job_counts.py)."""
     from pyspark.sql import functions as F
 
     from severless_data_pipeline_aws_spark.operators.dedup import (

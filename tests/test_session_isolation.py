@@ -4,9 +4,10 @@ share one session across threads.
 Intermediates are bound as ``spark.sql`` DataFrame arguments (PySpark
 drops the views it names for them once the query is analyzed) and
 streaming replays run in a child session, so no query registers a view
-or changes a conf on the caller's session. Multi-job intermediates are
-checkpointed rather than persisted, so no query leaves blocks in the
-cache manager that every session of the application shares.
+or changes a conf on the caller's session. No query persists or
+caches an intermediate, so none leaves blocks in the cache manager that
+every session of the application shares; the caller owns any result
+cache (``cache.TTLCache``).
 """
 
 from __future__ import annotations
@@ -36,6 +37,14 @@ _CONFS = ("spark.sql.shuffle.partitions", "spark.sql.sources.partitionOverwriteM
         "graph_hits_hubs_authorities",  # persisted its edge list and nodes
         "graph_closeness_centrality",  # persisted every BFS round
         "dedup_connected_components",  # checkpointed its edges and labels
+        "dashboard_cached_status_counts",  # cached its result
+        "dedup_allpairs_prefix_jaccard",  # persisted its shingle table
+        "funnel_market_basket_lift",  # persisted its baskets
+        "sampling_kcenter_greedy_coreset",  # persisted the embeddings
+        "similarity_pq_adc_topk",  # persisted subvectors, checkpointed the codebook
+        "similarity_kmeans_lloyd",  # persisted embeddings, checkpointed centroids
+        "similarity_pca_top_component",  # persisted embeddings and dims
+        "geo_dbscan_grid_clusters",  # star contraction checkpointed every round
     ],
 )
 def test_query_leaves_no_session_state(name, spark, sf_dir):
